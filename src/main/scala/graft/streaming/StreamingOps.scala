@@ -266,12 +266,13 @@ object StreamingOps {
     * rows in a `bands` table, and per batch: candidate pairs come from
     * joining the batch's band rows against the accumulated table
     * (column-pruned, bucket-key join), exact hashed-Jaccard verification
-    * joins the two sides' sets by id, and everything appends O(batch) with
-    * the same per-batch manifest-merge completeness contract as the index
-    * maintenance sinks (a lost delta file fails the next batch loudly;
-    * at-least-once replays are absorbed by an id replay guard + distinct
-    * at read). Per-batch cost includes a column-pruned scan of the
-    * accumulated id/band tables, so size micro-batches to minutes — the
+    * joins the two sides' sets by id, and everything appends O(batch)
+    * through the idempotent [[DeltaLog.commit]] every maintained sink
+    * shares (a lost delta file fails the next batch loudly; a committed
+    * redelivery is skipped, a torn one rewritten whole, overlapping ids
+    * are absorbed by an id guard + distinct at read). Per-batch cost
+    * includes a column-pruned scan of the accumulated id/band tables, so
+    * size micro-batches to minutes — the
     * state-store form serves the ms regime under its memory bound; this
     * form serves the 100 TB corpus under disk.
     *
@@ -291,87 +292,15 @@ object StreamingOps {
       maxBucketSize: Int = 4096): (DataFrame, Long) => Unit = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val rowsPerBand = numHashes / bands
-
-    (batch: DataFrame, batchId: Long) => {
-      val sess = batch.sparkSession
-      val hconf = sess.sparkContext.hadoopConfiguration
-      import graft.internal.SqlBridge.{column => gc, expression => ge}
-      val haveDocs = graft.io.HadoopIO.exists(s"$dir/docs", hconf)
-      if (haveDocs) {
-        validateDelta(s"$dir/docs", hconf)
-        validateDelta(s"$dir/bands", hconf)
-      }
-
-      val preparedAll = batch
-        .select(col("doc_id").cast("long").as("id"),
+    import graft.internal.SqlBridge.{column => gc, expression => ge}
+    bandedPairSink(spark, dir, "docs", "hs ARRAY<BIGINT>", ("doc_a", "doc_b"), "jaccard", maxBucketSize)(
+      _.select(col("doc_id").cast("long").as("id"),
           gc(graft.functions.ShingleHashSet(ge(col("text")), 3)).as("hs"),
           gc(graft.functions.ShingleBandHashes(ge(col("text")), 3, bands, rowsPerBand)).as("bhs"))
-        .filter(size(col("hs")) > 0)
-        .dropDuplicates("id")
-      // replay guard: ids already accumulated (a redelivered micro-batch)
-      // must not pair with themselves or re-append
-      val prepared = (if (!haveDocs) preparedAll
-        else preparedAll.join(sess.read.parquet(s"$dir/docs").select("id"), Seq("id"), "left_anti"))
-        .persist()
-      try {
-        val newBands = prepared
-          .select(col("id"), posexplode(col("bhs")).as(Seq("band", "bh")))
-        val oldBands =
-          if (!haveDocs) newBands.filter(lit(false))
-          else sess.read.parquet(s"$dir/bands").select("id", "band", "bh")
-            .join(newBands.select("band", "bh").distinct(), Seq("band", "bh"), "left_semi")
-        val allBands = newBands.unionByName(oldBands)
-
-        // bucket sizes on the join's own key; oversized buckets emit
-        // star pairs against the current min-id representative — the
-        // same degradation as the batch operator's skew guard
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bh")
-        val sized = allBands
-          .withColumn("__n", count(lit(1)).over(w))
-          .withColumn("__min_id", min("id").over(w))
-        val newInBucket = sized.join(newBands.select(col("id"), col("band"), col("bh")),
-          Seq("id", "band", "bh"), "left_semi")
-        val small = sized.filter(col("__n") <= maxBucketSize)
-        // a pair needs at least one NEW member; old×old pairs were emitted
-        // when their younger member arrived
-        val newSmall = small.join(newBands, Seq("id", "band", "bh"), "left_semi")
-        val smallPairs = newSmall.alias("l")
-          .join(small.alias("r"), Seq("band", "bh"))
-          .filter(col("l.id") =!= col("r.id"))
-          .select(least(col("l.id"), col("r.id")).as("doc_a"),
-            greatest(col("l.id"), col("r.id")).as("doc_b"))
-        val starPairs = newInBucket
-          .filter(col("__n") > maxBucketSize && col("id") =!= col("__min_id"))
-          .select(col("__min_id").as("doc_a"), col("id").as("doc_b"))
-        val candidates = smallPairs.unionByName(starPairs)
-          .dropDuplicates("doc_a", "doc_b")
-
-        // verify with each side's set: new ids resolve from the batch,
-        // old ids from the accumulated docs table (semi-filtered by the
-        // candidate ids before the join fans out)
-        val setsNew = prepared.select(col("id"), col("hs"))
-        val sets =
-          if (!haveDocs) setsNew
-          else setsNew.unionByName(sess.read.parquet(s"$dir/docs").select("id", "hs"))
-        val verified = candidates
-          .join(sets.select(col("id").as("doc_a"), col("hs").as("hs_a")), Seq("doc_a"))
-          .join(sets.select(col("id").as("doc_b"), col("hs").as("hs_b")), Seq("doc_b"))
-          .withColumn("jaccard", graft.dedup.Dedup.hashedJaccard(col("hs_a"), col("hs_b")))
-          .filter(col("jaccard") >= threshold)
-          .select(col("doc_a"), col("doc_b"), col("jaccard"))
-
-        // pairs first (their replay dedupes at read); the correctness-
-        // bearing state tables land AFTER with manifest merges, so a crash
-        // mid-batch is either invisible (no manifest update → extra files
-        // tolerated) or complete
-        verified.write.mode("append").parquet(s"$dir/pairs/batch=$batchId")
-        prepared.select("id", "hs")
-          .write.mode("append").parquet(s"$dir/docs/batch=$batchId")
-        mergeDeltaManifest(s"$dir/docs", s"batch=$batchId", hconf)
-        newBands.write.mode("append").parquet(s"$dir/bands/batch=$batchId")
-        mergeDeltaManifest(s"$dir/bands", s"batch=$batchId", hconf)
-      } finally prepared.unpersist()
-    }
+        .filter(size(col("hs")) > 0),
+      _.select(col("id"), posexplode(col("bhs")).as(Seq("band", "bh"))),
+      graft.dedup.Dedup.hashedJaccard(_, _),
+      _ >= threshold)
   }
 
   /** Converged distinct near-dup pairs of a [[nearDupSink]] directory
@@ -394,9 +323,9 @@ object StreamingOps {
     * band rows joined against batch + (bucket-key semi-filtered)
     * accumulated band rows, with [[graft.dedup.HammingLsh]]'s star-pair
     * degradation on oversized buckets, verified by the exact bit_count
-    * Hamming gate — O(batch) appends, the same per-batch manifest-merge
-    * completeness contract as the other maintained sinks, at-least-once
-    * replays absorbed by an id guard + distinct at read.
+    * Hamming gate — O(batch) appends through the same idempotent
+    * [[DeltaLog.commit]] as the other maintained sinks ([[bandedPairSink]]
+    * is the one implementation both banded sinks share).
     *
     * Converges to [[graft.dedup.HammingLsh.bandedPairs]]'s pair set on
     * buckets within `maxBucketSize` regardless of batch boundaries
@@ -419,81 +348,100 @@ object StreamingOps {
       s"pigeonhole completeness needs maxDist < bands, got maxDist=$maxDist bands=$bands")
     val bandW = 64 / bands
     val mask = if (bandW == 64) -1L else (1L << bandW) - 1L
+    bandedPairSink(spark, dir, "hashes", "dhash BIGINT", ("id_a", "id_b"), "hamming", maxBucketSize)(
+      _.select(col(idCol).cast("long").as("id"), col(hashCol).cast("long").as("dhash")),
+      prepared => prepared.select(col("id"), posexplode(array((0 until bands).map { b =>
+        shiftrightunsigned(col("dhash"), b * bandW).bitwiseAND(lit(mask))
+      }: _*)).as(Seq("band", "bh"))),
+      (a, b) => bit_count(a.bitwiseXOR(b)).cast("long"),
+      _ <= maxDist)
+  }
+
+  /** The disk-state banded-LSH sink [[nearDupSink]] and [[mediaPhashSink]]
+    * share. Per batch, one idempotent [[DeltaLog.commit]] over the `bands`
+    * log and the `stateLog` (id, payload) log — the replay guard's table,
+    * committed LAST as the marker, so a dead attempt's state files can
+    * never hide a redelivered batch from its own band rows:
+    *  - `prepare` projects the batch to (id, payload, …), one row per id;
+    *    ids the committed state already holds are dropped (a redelivered
+    *    or overlapping micro-batch must not self-pair or re-append);
+    *  - `bandsOf` explodes the survivors to (id, band, bh) rows; the
+    *    committed band rows are semi-filtered to the batch's bucket keys;
+    *  - [[bandedCandidates]] pairs them, and each candidate is verified
+    *    exactly with `score` over the two sides' payloads (new ids from
+    *    the batch, old ids from the committed state), kept by `keep`.
+    * Pairs land under the unmanifested `pairs` table first (their replay
+    * dedupes at read), then the state and band rows.
+    */
+  private def bandedPairSink(
+      spark: SparkSession,
+      dir: String,
+      stateLog: String,
+      payloadDdl: String,
+      pairCols: (String, String),
+      scoreCol: String,
+      maxBucketSize: Int)(
+      prepare: DataFrame => DataFrame,
+      bandsOf: DataFrame => DataFrame,
+      score: (Column, Column) => Column,
+      keep: Column => Column): (DataFrame, Long) => Unit = {
+    val stateDir = s"$dir/$stateLog"
+    val bandsDir = s"$dir/bands"
+    val payload = payloadDdl.takeWhile(_ != ' ')
+    val (a, b) = pairCols
+    DeltaLog.create(Seq(bandsDir, stateDir), spark.sparkContext.hadoopConfiguration)
 
     (batch: DataFrame, batchId: Long) => {
       val sess = batch.sparkSession
-      val hconf = sess.sparkContext.hadoopConfiguration
-      val haveHashes = graft.io.HadoopIO.exists(s"$dir/hashes", hconf)
-      if (haveHashes) {
-        validateDelta(s"$dir/hashes", hconf)
-        validateDelta(s"$dir/bands", hconf)
-      }
-
-      val preparedAll = batch
-        .select(col(idCol).cast("long").as("id"), col(hashCol).cast("long").as("dhash"))
-        .dropDuplicates("id")
-      // replay guard: ids already accumulated must not re-pair or re-append
-      val prepared = (if (!haveHashes) preparedAll
-        else preparedAll.join(sess.read.parquet(s"$dir/hashes").select("id"), Seq("id"), "left_anti"))
-        .persist()
-      try {
-        val newBands = prepared.select(
-          col("id"),
-          posexplode(array((0 until bands).map { b =>
-            shiftrightunsigned(col("dhash"), b * bandW).bitwiseAND(lit(mask))
-          }: _*)).as(Seq("band", "bh")))
-        val oldBands =
-          if (!haveHashes) newBands.filter(lit(false))
-          else sess.read.parquet(s"$dir/bands").select("id", "band", "bh")
+      DeltaLog.commit(sess, Seq(bandsDir, stateDir), batchId, scratch = Seq(s"$dir/pairs")) {
+        val state = DeltaLog.read(sess, stateDir, s"id BIGINT, $payloadDdl").select(col("id"), col(payload))
+        val prepared = prepare(batch).dropDuplicates("id")
+          .join(state.select("id"), Seq("id"), "left_anti")
+          .persist()
+        try {
+          val newBands = bandsOf(prepared)
+          val oldBands = DeltaLog.read(sess, bandsDir, "id BIGINT, band INT, bh BIGINT")
+            .select("id", "band", "bh")
             .join(newBands.select("band", "bh").distinct(), Seq("band", "bh"), "left_semi")
-        val allBands = newBands.unionByName(oldBands)
-
-        // bucket sizes on the join key across old + new; oversized
-        // buckets emit star pairs against the current min-id member
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bh")
-        val sized = allBands
-          .withColumn("__n", count(lit(1)).over(w))
-          .withColumn("__min_id", min("id").over(w))
-        val newInBucket = sized.join(newBands.select(col("id"), col("band"), col("bh")),
-          Seq("id", "band", "bh"), "left_semi")
-        val small = sized.filter(col("__n") <= maxBucketSize)
-        // a pair needs at least one NEW member; old×old pairs were
-        // emitted when their younger member arrived
-        val newSmall = small.join(newBands, Seq("id", "band", "bh"), "left_semi")
-        val smallPairs = newSmall.alias("l")
-          .join(small.alias("r"), Seq("band", "bh"))
-          .filter(col("l.id") =!= col("r.id"))
-          .select(least(col("l.id"), col("r.id")).as("id_a"),
-            greatest(col("l.id"), col("r.id")).as("id_b"))
-        val starPairs = newInBucket
-          .filter(col("__n") > maxBucketSize && col("id") =!= col("__min_id"))
-          .select(col("__min_id").as("id_a"), col("id").as("id_b"))
-        val candidates = smallPairs.unionByName(starPairs)
-          .dropDuplicates("id_a", "id_b")
-
-        // exact Hamming verify: new ids resolve from the batch, old ids
-        // from the accumulated table (candidate-semi-filtered first)
-        val hashesNew = prepared.select(col("id"), col("dhash"))
-        val sides =
-          if (!haveHashes) hashesNew
-          else hashesNew.unionByName(
-            sess.read.parquet(s"$dir/hashes").select("id", "dhash"))
-        val verified = candidates
-          .join(sides.select(col("id").as("id_a"), col("dhash").as("__h_a")), Seq("id_a"))
-          .join(sides.select(col("id").as("id_b"), col("dhash").as("__h_b")), Seq("id_b"))
-          .withColumn("hamming", bit_count(col("__h_a").bitwiseXOR(col("__h_b"))).cast("long"))
-          .filter(col("hamming") <= maxDist)
-          .select(col("id_a"), col("id_b"), col("hamming"))
-
-        // pairs first (replays dedupe at read); state tables land AFTER
-        // with manifest merges — a crash mid-batch is invisible or complete
-        verified.write.mode("append").parquet(s"$dir/pairs/batch=$batchId")
-        prepared.write.mode("append").parquet(s"$dir/hashes/batch=$batchId")
-        mergeDeltaManifest(s"$dir/hashes", s"batch=$batchId", hconf)
-        newBands.write.mode("append").parquet(s"$dir/bands/batch=$batchId")
-        mergeDeltaManifest(s"$dir/bands", s"batch=$batchId", hconf)
-      } finally prepared.unpersist()
+          val sets = prepared.select(col("id"), col(payload)).unionByName(state)
+          bandedCandidates(newBands, oldBands, maxBucketSize, a, b)
+            .join(sets.select(col("id").as(a), col(payload).as("__p_a")), Seq(a))
+            .join(sets.select(col("id").as(b), col(payload).as("__p_b")), Seq(b))
+            .withColumn(scoreCol, score(col("__p_a"), col("__p_b")))
+            .filter(keep(col(scoreCol)))
+            .select(col(a), col(b), col(scoreCol))
+            .write.parquet(s"$dir/pairs/batch=$batchId")
+          prepared.select(col("id"), col(payload)).write.parquet(s"$stateDir/batch=$batchId")
+          newBands.write.parquet(s"$bandsDir/batch=$batchId")
+        } finally prepared.unpersist()
+      }
     }
+  }
+
+  /** Candidate pairs (a < b) of a banded-LSH batch: bucket sizes on the
+    * join key across the batch's `newBands` and the bucket-matched
+    * `oldBands`; buckets within `maxBucketSize` pair all members with at
+    * least one NEW member (old×old pairs were emitted when their younger
+    * member arrived), oversized buckets degrade to star pairs against the
+    * bucket's current min-id representative — the same skew guard as the
+    * batch operators.
+    */
+  private def bandedCandidates(newBands: DataFrame, oldBands: DataFrame, maxBucketSize: Int,
+      a: String, b: String): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bh")
+    val sized = newBands.unionByName(oldBands)
+      .withColumn("__n", count(lit(1)).over(w))
+      .withColumn("__min_id", min("id").over(w))
+    val small = sized.filter(col("__n") <= maxBucketSize)
+    val smallPairs = small.join(newBands, Seq("id", "band", "bh"), "left_semi").alias("l")
+      .join(small.alias("r"), Seq("band", "bh"))
+      .filter(col("l.id") =!= col("r.id"))
+      .select(least(col("l.id"), col("r.id")).as(a), greatest(col("l.id"), col("r.id")).as(b))
+    val starPairs = sized.join(newBands.select(col("id"), col("band"), col("bh")),
+        Seq("id", "band", "bh"), "left_semi")
+      .filter(col("__n") > maxBucketSize && col("id") =!= col("__min_id"))
+      .select(col("__min_id").as(a), col("id").as(b))
+    smallPairs.unionByName(starPairs).dropDuplicates(a, b)
   }
 
   /** Converged distinct near-dup pairs of a [[mediaPhashSink]] directory
@@ -538,9 +486,9 @@ object StreamingOps {
     * with the SAME pointer-doubling operator batch mode uses, so the
     * converged output is row-for-row the batch `dedup_groups` answer.
     *
-    * The per-batch manifest-merge completeness contract matches the
-    * other maintained sinks: a lost delta file fails the next batch
-    * loudly ([[validateDelta]]).
+    * The per-batch [[DeltaLog.commit]] contract matches the other
+    * maintained sinks: a lost delta file fails the next batch loudly, a
+    * committed redelivery is skipped.
     */
   def dedupGroupsSink(
       spark: SparkSession,
@@ -549,135 +497,136 @@ object StreamingOps {
       bCol: String = "doc_b",
       maxResolveRounds: Int = 1000,
       maxDriverEdges: Int = 100000): (DataFrame, Long) => Unit = {
+    val labelsDir = s"$dir/labels"
+    DeltaLog.create(Seq(labelsDir), spark.sparkContext.hadoopConfiguration)
     (batch: DataFrame, batchId: Long) => {
       val sess = batch.sparkSession
-      val hconf = sess.sparkContext.hadoopConfiguration
-      val haveLabels = graft.io.HadoopIO.exists(s"$dir/labels", hconf)
-      if (haveLabels) validateDelta(s"$dir/labels", hconf)
+      DeltaLog.commit(sess, Seq(labelsDir), batchId) {
+        val committed = DeltaLog.rows(sess, labelsDir)
 
-      // no dedup pass: duplicate pairs (and at-least-once replays) are
-      // harmless to union-find — they re-derive the same root edges,
-      // which min-aggregation absorbs
-      val pairs = batch
-        .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-        .filter(col("a") =!= col("b"))
-        .persist()
-      try {
-        if (pairs.isEmpty) () // nothing to union; no state to touch
-        else {
-          // resolve every batch endpoint to its current root: iterated
-          // frontier-keyed min-parent lookups against the accumulated
-          // forest (labels may hold several rows per id — min wins)
-          val nodes = pairs.select(col("a").as("node"))
-            .unionByName(pairs.select(col("b").as("node"))).distinct()
-          var frontier = nodes.withColumn("label", col("node")).persist()
-          // every frontier generation is kept (persisted) until the write:
-          // the labels seen along the walk are exactly the CHAIN NODES —
-          // interior losing roots whose own rows were written batches ago
-          // — and compressing THEM (not just the endpoints) is what keeps
-          // chains from growing one hop per merge between walks
-          val gens = scala.collection.mutable.ListBuffer.empty[org.apache.spark.sql.DataFrame]
-          if (haveLabels) {
-            val labels = sess.read.parquet(s"$dir/labels").select("id", "parent")
-            def step(f: org.apache.spark.sql.DataFrame) = {
-              val keys = f.select(col("label")).distinct()
-              val hop = labels.join(broadcast(keys.withColumnRenamed("label", "id")), Seq("id"))
-                .groupBy(col("id").as("label")).agg(min("parent").as("next"))
-              // lazy localCheckpoint, not persist: the labelSum action
-              // materializes the round AND truncates lineage — an iterated
-              // join would otherwise nest plans until explain/codegen
-              // chokes (same per-round discipline as connectedComponents)
-              f.join(hop, Seq("label"), "left")
-                .select(col("node"), coalesce(col("next"), col("label")).as("label"))
-                .localCheckpoint(false)
-            }
-            def labelSum(f: org.apache.spark.sql.DataFrame): Long =
-              f.agg(coalesce(sum("label"), lit(0L))).head().getLong(0)
-            var lastSum = labelSum(frontier)
-            var rounds = 0
-            var converged = false
-            while (rounds < maxResolveRounds && !converged) {
-              val next = step(frontier)
-              val s = labelSum(next)
-              gens += frontier // still persisted; freed after the write
-              converged = s == lastSum // parents strictly decrease until root
-              lastSum = s
-              frontier = next
-              rounds += 1
-            }
-            require(converged,
-              s"dedupGroupsSink: root resolution exceeded $maxResolveRounds rounds — " +
-                "a parent chain deeper than maxResolveRounds merges accumulated between " +
-                "walks; raise maxResolveRounds (each round is one frontier-keyed join)")
-          }
-
-          // batch-local spanning frontier: components over ROOT edges,
-          // resolved with the batch operator itself (batch-bounded input)
-          val rootEdges = pairs
-            .join(frontier.withColumnRenamed("node", "a").withColumnRenamed("label", "ra"), Seq("a"))
-            .join(frontier.withColumnRenamed("node", "b").withColumnRenamed("label", "rb"), Seq("b"))
-            .select(col("ra"), col("rb")).filter(col("ra") =!= col("rb"))
-            .distinct() // many pairs can bridge the SAME two clusters: one
-            // root edge each — without the dedup a 1-edge frontier could
-            // spuriously escalate past maxDriverEdges
-            .persist()
-          val nRootEdges = rootEdges.count()
-          // the spanning frontier is usually TINY relative to the batch
-          // (most pairs fall inside existing clusters): below the bound,
-          // classic driver union-find beats the distributed operator's
-          // per-round checkpoint+action protocol by ~20×; above it the
-          // batch operator takes over — nothing unbounded ever collects
-          // (maxDriverEdges=100k root edges ≈ 1.6 MB)
-          val merged: DataFrame =
-            if (nRootEdges == 0) frontier.select(col("label").as("id"), col("label").as("group_id"))
-              .dropDuplicates("id")
-            else if (nRootEdges <= maxDriverEdges) {
-              import sess.implicits._
-              val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-              def find(x: Long): Long = {
-                var r = x
-                while (parent.getOrElse(r, r) != r) r = parent(r)
-                var c = x // path compression
-                while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
-                r
+        // no dedup pass: duplicate pairs (and at-least-once replays) are
+        // harmless to union-find — they re-derive the same root edges,
+        // which min-aggregation absorbs
+        val pairs = batch
+          .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
+          .filter(col("a") =!= col("b"))
+          .persist()
+        try {
+          if (pairs.isEmpty) () // nothing to union; no state to touch
+          else {
+            // resolve every batch endpoint to its current root: iterated
+            // frontier-keyed min-parent lookups against the accumulated
+            // forest (labels may hold several rows per id — min wins)
+            val nodes = pairs.select(col("a").as("node"))
+              .unionByName(pairs.select(col("b").as("node"))).distinct()
+            var frontier = nodes.withColumn("label", col("node")).persist()
+            // every frontier generation is kept (persisted) until the write:
+            // the labels seen along the walk are exactly the CHAIN NODES —
+            // interior losing roots whose own rows were written batches ago
+            // — and compressing THEM (not just the endpoints) is what keeps
+            // chains from growing one hop per merge between walks
+            val gens = scala.collection.mutable.ListBuffer.empty[org.apache.spark.sql.DataFrame]
+            committed.foreach { all =>
+              val labels = all.select("id", "parent")
+              def step(f: org.apache.spark.sql.DataFrame) = {
+                val keys = f.select(col("label")).distinct()
+                val hop = labels.join(broadcast(keys.withColumnRenamed("label", "id")), Seq("id"))
+                  .groupBy(col("id").as("label")).agg(min("parent").as("next"))
+                // lazy localCheckpoint, not persist: the labelSum action
+                // materializes the round AND truncates lineage — an iterated
+                // join would otherwise nest plans until explain/codegen
+                // chokes (same per-round discipline as connectedComponents)
+                f.join(hop, Seq("label"), "left")
+                  .select(col("node"), coalesce(col("next"), col("label")).as("label"))
+                  .localCheckpoint(false)
               }
-              rootEdges.as[(Long, Long)].collect().foreach { case (a, b) =>
-                val (ra, rb) = (find(a), find(b))
-                if (ra != rb) { // union by MIN — same invariant as the batch operator
-                  if (ra < rb) parent(rb) = ra else parent(ra) = rb
+              def labelSum(f: org.apache.spark.sql.DataFrame): Long =
+                f.agg(coalesce(sum("label"), lit(0L))).head().getLong(0)
+              var lastSum = labelSum(frontier)
+              var rounds = 0
+              var converged = false
+              while (rounds < maxResolveRounds && !converged) {
+                val next = step(frontier)
+                val s = labelSum(next)
+                gens += frontier // still persisted; freed after the write
+                converged = s == lastSum // parents strictly decrease until root
+                lastSum = s
+                frontier = next
+                rounds += 1
+              }
+              require(converged,
+                s"dedupGroupsSink: root resolution exceeded $maxResolveRounds rounds — " +
+                  "a parent chain deeper than maxResolveRounds merges accumulated between " +
+                  "walks; raise maxResolveRounds (each round is one frontier-keyed join)")
+            }
+
+            // batch-local spanning frontier: components over ROOT edges,
+            // resolved with the batch operator itself (batch-bounded input)
+            val rootEdges = pairs
+              .join(frontier.withColumnRenamed("node", "a").withColumnRenamed("label", "ra"), Seq("a"))
+              .join(frontier.withColumnRenamed("node", "b").withColumnRenamed("label", "rb"), Seq("b"))
+              .select(col("ra"), col("rb")).filter(col("ra") =!= col("rb"))
+              .distinct() // many pairs can bridge the SAME two clusters: one
+              // root edge each — without the dedup a 1-edge frontier could
+              // spuriously escalate past maxDriverEdges
+              .persist()
+            val nRootEdges = rootEdges.count()
+            // the spanning frontier is usually TINY relative to the batch
+            // (most pairs fall inside existing clusters): below the bound,
+            // classic driver union-find beats the distributed operator's
+            // per-round checkpoint+action protocol by ~20×; above it the
+            // batch operator takes over — nothing unbounded ever collects
+            // (maxDriverEdges=100k root edges ≈ 1.6 MB)
+            val merged: DataFrame =
+              if (nRootEdges == 0) frontier.select(col("label").as("id"), col("label").as("group_id"))
+                .dropDuplicates("id")
+              else if (nRootEdges <= maxDriverEdges) {
+                import sess.implicits._
+                val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+                def find(x: Long): Long = {
+                  var r = x
+                  while (parent.getOrElse(r, r) != r) r = parent(r)
+                  var c = x // path compression
+                  while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
+                  r
                 }
-              }
-              val resolved = parent.keys.toSeq.sorted.map(x => (x, find(x)))
-              val roots = resolved.map(_._2).distinct.map(r => (r, r))
-              (resolved ++ roots).toDF("id", "group_id")
-            } else graft.dedup.Dedup.connectedComponents(rootEdges, "ra", "rb")
-          // losing roots point at the new min root; touched ids compress
-          // straight to it (min-wins makes re-appends harmless)
-          val rootRows = merged.filter(col("id") =!= col("group_id"))
-            .select(col("id"), col("group_id").as("parent"))
-          // compression targets: the endpoints AND every chain node the
-          // walk traversed (a chain node at round k is some walker's label;
-          // its root is that walker's final label) — flattening walked
-          // chains is the amortized path compression that bounds future
-          // walk depth to the merges since the last touch
-          val trail = gens.drop(1).map(g =>
-              g.join(frontier.withColumnRenamed("label", "__flabel"), Seq("node"))
-                .select(col("label").as("node"), col("__flabel").as("label")))
-            .foldLeft(frontier.select(col("node"), col("label")))(_ unionByName _)
-            .dropDuplicates("node")
-          val compress = trail
-            .join(merged.withColumnRenamed("id", "label"), Seq("label"), "left")
-            .select(col("node").as("id"),
-              coalesce(col("group_id"), col("label")).as("parent"))
-            .filter(col("id") =!= col("parent"))
-          rootRows.unionByName(compress).dropDuplicates("id", "parent")
-            .write.mode("append").parquet(s"$dir/labels/batch=$batchId")
-          mergeDeltaManifest(s"$dir/labels", s"batch=$batchId", hconf)
-          rootEdges.unpersist()
-          gens.foreach(_.unpersist())
-          frontier.unpersist()
-        }
-      } finally pairs.unpersist()
+                rootEdges.as[(Long, Long)].collect().foreach { case (a, b) =>
+                  val (ra, rb) = (find(a), find(b))
+                  if (ra != rb) { // union by MIN — same invariant as the batch operator
+                    if (ra < rb) parent(rb) = ra else parent(ra) = rb
+                  }
+                }
+                val resolved = parent.keys.toSeq.sorted.map(x => (x, find(x)))
+                val roots = resolved.map(_._2).distinct.map(r => (r, r))
+                (resolved ++ roots).toDF("id", "group_id")
+              } else graft.dedup.Dedup.connectedComponents(rootEdges, "ra", "rb")
+            // losing roots point at the new min root; touched ids compress
+            // straight to it (min-wins makes re-appends harmless)
+            val rootRows = merged.filter(col("id") =!= col("group_id"))
+              .select(col("id"), col("group_id").as("parent"))
+            // compression targets: the endpoints AND every chain node the
+            // walk traversed (a chain node at round k is some walker's label;
+            // its root is that walker's final label) — flattening walked
+            // chains is the amortized path compression that bounds future
+            // walk depth to the merges since the last touch
+            val trail = gens.drop(1).map(g =>
+                g.join(frontier.withColumnRenamed("label", "__flabel"), Seq("node"))
+                  .select(col("label").as("node"), col("__flabel").as("label")))
+              .foldLeft(frontier.select(col("node"), col("label")))(_ unionByName _)
+              .dropDuplicates("node")
+            val compress = trail
+              .join(merged.withColumnRenamed("id", "label"), Seq("label"), "left")
+              .select(col("node").as("id"),
+                coalesce(col("group_id"), col("label")).as("parent"))
+              .filter(col("id") =!= col("parent"))
+            rootRows.unionByName(compress).dropDuplicates("id", "parent")
+              .write.parquet(s"$labelsDir/batch=$batchId")
+            rootEdges.unpersist()
+            gens.foreach(_.unpersist())
+            frontier.unpersist()
+          }
+        } finally pairs.unpersist()
+      }
     }
   }
 
@@ -699,8 +648,7 @@ object StreamingOps {
       spark: SparkSession,
       dir: String,
       maxRounds: Int = 64): DataFrame = {
-    validateDelta(s"$dir/labels", spark.sparkContext.hadoopConfiguration)
-    val forest = spark.read.parquet(s"$dir/labels")
+    val forest = DeltaLog.read(spark, s"$dir/labels", "id BIGINT, parent BIGINT")
       .groupBy("id").agg(min("parent").as("parent"))
       .persist()
     // roots never carry a row of their own — they enter as their own group
@@ -856,29 +804,38 @@ object StreamingOps {
       spill: Int): Unit = {
     import spark.implicits._
     val dim = centroids.headOption.map(_.length).getOrElse(0)
-    graft.knn.Ivf.loadMeta(spark, indexDir) match {
-      case Some(existing) =>
-        require(existing.metric == metric && existing.spill == spill &&
-          existing.c == centroids.length && existing.dim == dim,
-          s"index at $indexDir is already maintained under (metric=${existing.metric}, " +
-            s"spill=${existing.spill}, c=${existing.c}, dim=${existing.dim}); restarting the " +
-            s"sink with (metric=$metric, spill=$spill, c=${centroids.length}, dim=$dim) would " +
-            "rewrite the quantizer under delta rows assigned with the old one — delete the " +
-            "directory (or retrain and compact explicitly) instead")
-        val stored = spark.read.parquet(s"$indexDir/centroids")
-          .select("cell", "centroid").as[(Int, Seq[Float])].collect()
-          .sortBy(_._1).map(_._2.toArray)
-        require(stored.length == centroids.length &&
-          stored.zip(centroids).forall { case (a, b) => java.util.Arrays.equals(a, b) },
-          s"index at $indexDir is already maintained with DIFFERENT centroid values — old " +
-            "delta rows carry cell ids from the stored quantizer; refusing to overwrite it")
-      case None =>
-        centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-          .toDF("cell", "centroid").coalesce(1)
-          .write.mode("overwrite").parquet(s"$indexDir/centroids")
-        Seq((metric, spill, centroids.length, dim))
-          .toDF("metric", "spill", "c", "dim").coalesce(1)
-          .write.mode("overwrite").parquet(s"$indexDir/meta")
+    val existingMeta = graft.knn.Ivf.loadMeta(spark, indexDir)
+    existingMeta.foreach { existing =>
+      require(existing.metric == metric && existing.spill == spill &&
+        existing.c == centroids.length && existing.dim == dim,
+        s"index at $indexDir is already maintained under (metric=${existing.metric}, " +
+          s"spill=${existing.spill}, c=${existing.c}, dim=${existing.dim}); restarting the " +
+          s"sink with (metric=$metric, spill=$spill, c=${centroids.length}, dim=$dim) would " +
+          "rewrite the quantizer under delta rows assigned with the old one — delete the " +
+          "directory (or retrain and compact explicitly) instead")
+      val stored = loadCentroids(spark, indexDir)
+      require(stored.length == centroids.length &&
+        stored.zip(centroids).forall { case (a, b) => java.util.Arrays.equals(a, b) },
+        s"index at $indexDir is already maintained with DIFFERENT centroid values — old " +
+          "delta rows carry cell ids from the stored quantizer; refusing to overwrite it")
+    }
+    // the delta log is seeded with the sidecars, so a fresh directory
+    // serves (empty) views and gauges before its first batch. Earlier
+    // versions seeded it at the first batch: a directory they stopped
+    // before it has meta and neither the log nor its compaction tmp, so
+    // there is nothing to bless and it is seeded now instead of refused
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val delta = s"$indexDir/delta"
+    if (existingMeta.isDefined && !Seq(delta, s"$delta.compact").exists(graft.io.HadoopIO.exists(_, hconf)))
+      DeltaLog.create(Seq(delta), hconf)
+    DeltaLog.init(indexDir, Seq(delta), existingMeta.isEmpty, "maintained IVF",
+        "compactIvfMaintained", hconf) {
+      centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
+        .toDF("cell", "centroid").coalesce(1)
+        .write.mode("overwrite").parquet(s"$indexDir/centroids")
+      Seq((metric, spill, centroids.length, dim))
+        .toDF("metric", "spill", "c", "dim").coalesce(1)
+        .write.mode("overwrite").parquet(s"$indexDir/meta")
     }
   }
 
@@ -904,120 +861,41 @@ object StreamingOps {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("id", "version")
         .orderBy(col("op"), xxhash64(col("vector")))
-      val ops = batch.toDF()
-        .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-        .persist()
-      try {
-        val upserts = ops.filter(col("op") === "upsert")
-        // assignment is a pure function of (id, vector): assign each
-        // distinct pair once, then re-attach every version by joining on
-        // BOTH columns (Spark normalizes NaN/-0.0 in join keys, so the
-        // id-only join's cross-product of same-batch re-upserts cannot
-        // recur, and no row is lost to NaN inequality). The trailing
-        // dropDuplicates guards the sign-of-zero corner where two
-        // key-normalized-equal vectors fan out onto each other's versions.
-        val assigned = graft.knn.Ivf
-          .assign(sess, upserts.select("id", "vector").dropDuplicates("id", "vector"),
-            centroids, metric, spill)
-          .join(upserts.select(col("id"), col("vector"), col("version")), Seq("id", "vector"))
-          .select(col("id"), col("cell"), col("vector"), col("version"), lit("upsert").as("op"))
-          .dropDuplicates("id", "version", "cell")
-        val tombstones = ops.filter(col("op") === "remove")
-          .select(col("id"), lit(-1).as("cell"), lit(null).cast("array<float>").as("vector"),
-            col("version"), lit("remove").as("op"))
-        // one subdirectory per micro-batch: the completeness registry then
-        // lists only THIS batch's files (O(batch), not O(history) — an S3
-        // maintenance stream must not re-list months of deltas per batch)
-        // and merges them into the manifest. Parquet partition discovery
-        // surfaces `batch` as a column; the view reader ignores it.
-        // repartition on the partition column first: otherwise every write
-        // task emits a file per cell it saw (tasks × cells files per
-        // batch — the classic small-files explosion an S3 delta log at
-        // corpus scale cannot absorb); after the shuffle each cell is
-        // written by one task, so files ≈ cells
-        assigned.unionByName(tombstones).repartition(col("cell"))
-          .write.mode("append").partitionBy("cell").parquet(s"$indexDir/delta/batch=$batchId")
-        mergeDeltaManifest(s"$indexDir/delta", s"batch=$batchId",
-          sess.sparkContext.hadoopConfiguration)
-      } finally ops.unpersist()
-    }
-  }
-
-  /** (relative parquet path, length) pairs under a delta dir, optionally
-    * restricted to one batch subdirectory. Layout-independent: the IVF
-    * delta is cell-partitioned (`batch=&#42;/cell=&#42;/file`), the HNSW delta is
-    * flat (`batch=&#42;/file`); a batch directory holds exactly one of the two
-    * shapes, so globbing both depths never double-counts.
-    */
-  private def listDelta(
-      deltaDir: String,
-      conf: org.apache.hadoop.conf.Configuration,
-      onlyBatch: Option[String] = None): Seq[(String, Long)] = {
-    val dir = onlyBatch.map(b => s"$deltaDir/$b").getOrElse(deltaDir)
-    val prefix = onlyBatch.map(_ + "/").getOrElse("")
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val qualified = p.getFileSystem(conf).makeQualified(p).toString
-    val patterns =
-      if (onlyBatch.isDefined) Seq("*.parquet", "*/*.parquet")
-      else Seq("*/*.parquet", "*/*/*.parquet")
-    patterns.flatMap(pat => graft.io.HadoopIO.globWithLength(dir, pat, conf))
-      .map { case (uri, len) => (prefix + uri.stripPrefix(qualified + "/"), len) }
-      .sortBy(_._1)
-  }
-
-  /** Fold one batch subdirectory's files into the delta manifest —
-    * O(batch) listing + one manifest rewrite, never a full-history glob
-    * (the same incremental shape as the HNSW artifact manifest merge).
-    */
-  private def mergeDeltaManifest(
-      deltaDir: String,
-      batchSubdir: String,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val prior = graft.io.Manifest.read(deltaDir, conf).getOrElse(Seq.empty)
-    val batchEntries = listDelta(deltaDir, conf, Some(batchSubdir))
-      .map { case (rel, len) => graft.io.ManifestEntry(rel, len, -1L) }
-    val batchNames = batchEntries.map(_.name).toSet
-    graft.io.Manifest.write(deltaDir,
-      prior.filterNot(e => batchNames(e.name)) ++ batchEntries, conf)
-  }
-
-  private def writeDeltaManifest(
-      deltaDir: String,
-      conf: org.apache.hadoop.conf.Configuration): Unit =
-    graft.io.Manifest.write(deltaDir,
-      listDelta(deltaDir, conf).map { case (rel, len) => graft.io.ManifestEntry(rel, len, -1L) },
-      conf)
-
-  /** Fail-loud completeness check for a maintenance delta log: every file
-    * the manifest lists must be present with its recorded length (a lost
-    * or truncated delta file would otherwise silently drop mutations from
-    * the reconstructed view). EXTRA unlisted files are tolerated — they
-    * are uncommitted appends from an at-least-once `foreachBatch`
-    * redelivery (a crash between append and manifest update), and the
-    * latest-wins view dedupes their replayed rows. A MISSING manifest is
-    * an error, not a passthrough: the sink merges one from batch 0 and
-    * [[compactIvfMaintained]] writes one before its swap, so a
-    * manifest-less delta dir is either foreign or the surviving half of a
-    * non-atomic (S3-style file-by-file) rename that died mid-swap — in
-    * both cases serving it silently could drop mutations.
-    */
-  private def validateDelta(
-      deltaDir: String,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val entries = graft.io.Manifest.read(deltaDir, conf).getOrElse(
-      throw new IllegalStateException(
-        s"maintained delta log at $deltaDir has no manifest — sinks write one from " +
-          "batch 0 and compaction writes one before its swap, so this directory is foreign or " +
-          "a torn compaction swap; refusing to serve unverifiable state"))
-    val present = listDelta(deltaDir, conf).toMap
-    val missing = entries.filterNot(e => present.contains(e.name))
-    require(missing.isEmpty,
-      s"maintained delta log at $deltaDir is INCOMPLETE: manifest lists ${entries.size} " +
-        s"files, missing [${missing.map(_.name).mkString(", ")}] — refusing to serve a view " +
-        "with silently dropped mutations")
-    entries.foreach { e =>
-      require(present(e.name) == e.length,
-        s"delta file ${e.name} at $deltaDir is ${present(e.name)}B, manifest says ${e.length}B (torn)")
+      DeltaLog.commit(sess, Seq(s"$indexDir/delta"), batchId) {
+        val ops = batch.toDF()
+          .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+          .persist()
+        try {
+          val upserts = ops.filter(col("op") === "upsert")
+          // assignment is a pure function of (id, vector): assign each
+          // distinct pair once, then re-attach every version by joining on
+          // BOTH columns (Spark normalizes NaN/-0.0 in join keys, so the
+          // id-only join's cross-product of same-batch re-upserts cannot
+          // recur, and no row is lost to NaN inequality). The trailing
+          // dropDuplicates guards the sign-of-zero corner where two
+          // key-normalized-equal vectors fan out onto each other's versions.
+          val assigned = graft.knn.Ivf
+            .assign(sess, upserts.select("id", "vector").dropDuplicates("id", "vector"),
+              centroids, metric, spill)
+            .join(upserts.select(col("id"), col("vector"), col("version")), Seq("id", "vector"))
+            .select(col("id"), col("cell"), col("vector"), col("version"), lit("upsert").as("op"))
+            .dropDuplicates("id", "version", "cell")
+          val tombstones = ops.filter(col("op") === "remove")
+            .select(col("id"), lit(-1).as("cell"), lit(null).cast("array<float>").as("vector"),
+              col("version"), lit("remove").as("op"))
+          // one subdirectory per micro-batch: the commit lists only THIS
+          // batch's files (O(batch), not O(history) — an S3 maintenance
+          // stream must not re-list months of deltas per batch). Parquet
+          // partition discovery surfaces `batch` as a column; the view
+          // reader ignores it. Repartition on the partition column first:
+          // otherwise every write task emits a file per cell it saw (tasks ×
+          // cells files per batch — the classic small-files explosion an S3
+          // delta log at corpus scale cannot absorb); after the shuffle each
+          // cell is written by one task, so files ≈ cells
+          assigned.unionByName(tombstones).repartition(col("cell"))
+            .write.partitionBy("cell").parquet(s"$indexDir/delta/batch=$batchId")
+        } finally ops.unpersist()
+      }
     }
   }
 
@@ -1043,28 +921,12 @@ object StreamingOps {
     */
   private def latestDeltaRows(spark: SparkSession, indexDir: String,
       asOfVersion: Option[Long] = None): DataFrame = {
-    validateDelta(s"$indexDir/delta", spark.sparkContext.hadoopConfiguration)
-    val delta = spark.read.parquet(s"$indexDir/delta")
-    val scoped = asOfVersion match {
-      case None => delta
-      case Some(v) =>
-        // Compaction collapses history to each id's winning rows: any id
-        // mutated after `v` has lost its at-`v` state once those winners
-        // fold into `batch=compacted`. The newest compacted version is
-        // therefore the time-travel horizon — at or above it every
-        // compacted winner already satisfies version <= v (exact read);
-        // below it the read would silently miss overwritten or removed
-        // state, so it must fail loudly instead. (The partition column is
-        // int-inferred while no compacted batch exists — the string cast
-        // makes the filter well-typed in both layouts.)
-        val floor = delta.filter(col("batch").cast("string") === "compacted")
-          .agg(max(col("version"))).head().get(0)
-        if (floor != null) require(v >= floor.asInstanceOf[Long],
-          s"as-of version $v predates the compaction horizon $floor of $indexDir — history " +
-            "below the newest compacted version was collapsed by compactIvfMaintained and " +
-            "cannot be replayed; keep the delta log un-compacted as far back as reads need")
-        delta.filter(col("version") <= v)
-    }
+    val deltaDir = s"$indexDir/delta"
+    val delta = DeltaLog.read(spark, deltaDir, "id BIGINT, cell INT, vector ARRAY<FLOAT>, " +
+      "pq_codes BINARY, version BIGINT, op STRING, batch STRING")
+    // an as-of read below the compaction horizon fails loudly (see DeltaLog.asOf)
+    val scoped = asOfVersion.fold(delta)(DeltaLog.asOf(delta, deltaDir, _, indexDir,
+      "compactIvfMaintained", spark.sparkContext.hadoopConfiguration))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("id").orderBy(col("version").desc, col("op").asc)
     scoped
@@ -1108,38 +970,21 @@ object StreamingOps {
     * compact resumes the swap from the manifest-complete `delta.compact`;
     * a crash INSIDE a non-atomic file-by-file rename (S3-style stores)
     * leaves a partial `delta` whose manifest either lists files still
-    * stranded in `delta.compact` (missing → [[validateDelta]] error) or
-    * has not moved yet (no manifest → [[validateDelta]] error).
+    * stranded in `delta.compact` (missing → [[DeltaLog.validate]] error) or
+    * has not moved yet (no manifest → [[DeltaLog.validate]] error).
     */
   def compactIvfMaintained(spark: SparkSession, indexDir: String): Unit = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val deltaDir = s"$indexDir/delta"
-    val tmpDir = s"$indexDir/delta.compact"
-    if (!graft.io.HadoopIO.exists(deltaDir, hconf)) {
-      require(graft.io.HadoopIO.exists(tmpDir, hconf),
-        s"neither $deltaDir nor $tmpDir exists — not a maintained IVF directory")
-      require(graft.io.Manifest.read(tmpDir, hconf).isDefined,
-        s"$tmpDir exists without a manifest but $deltaDir is gone — inconsistent state " +
-          "(the manifest is written before the swap begins); refusing to resume")
-      graft.io.HadoopIO.rename(tmpDir, deltaDir, hconf)
-      return
-    }
-    graft.io.HadoopIO.delete(tmpDir, hconf) // stale tmp from an interrupted attempt
-    latestDeltaRows(spark, indexDir)
+    if (DeltaLog.resume(deltaDir, s"$deltaDir.compact", hconf)) return
+    require(graft.io.HadoopIO.exists(deltaDir, hconf),
+      s"neither $deltaDir nor $deltaDir.compact exists — not a maintained IVF directory")
+    if (DeltaLog.validate(deltaDir, hconf).isEmpty) return // nothing to fold
+    DeltaLog.swap(deltaDir, DeltaLog.stage(deltaDir, hconf)(tmp => latestDeltaRows(spark, indexDir)
       .drop("batch") // discovered partition column; compacted history is one pseudo-batch
       .repartition(col("cell")) // one writer per cell: files ≈ cells, not tasks × cells
-      .write.partitionBy("cell").parquet(s"$tmpDir/batch=compacted")
-    // manifest BEFORE the destructive steps: from here on, any partial
-    // state under deltaDir fails validateDelta instead of serving silently
-    writeDeltaManifest(tmpDir, hconf)
-    graft.io.HadoopIO.delete(deltaDir, hconf)
-    graft.io.HadoopIO.rename(tmpDir, deltaDir, hconf)
+      .write.partitionBy("cell").parquet(s"$tmp/batch=compacted")), hconf)
   }
-
-  private def deltaToBaseRatio(deltaBytes: Long, baseBytes: Long): Double =
-    if (deltaBytes == 0L) 0.0
-    else if (baseBytes == 0L) Double.PositiveInfinity
-    else deltaBytes.toDouble / baseBytes
 
   /** Operational gauge for the IVF maintenance log: bytes of un-compacted
     * delta batches relative to the compacted history, read from the
@@ -1148,12 +993,9 @@ object StreamingOps {
     * compacted history (a never-compacted log is always worth one pass).
     */
   def ivfMaintainedDeltaRatio(spark: SparkSession, indexDir: String): Double = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val entries = graft.io.Manifest.read(s"$indexDir/delta", hconf).getOrElse(
-      throw new IllegalStateException(
-        s"maintained IVF delta log at $indexDir/delta has no manifest — not a maintained IVF dir"))
-    val (compacted, fresh) = entries.partition(_.name.startsWith("batch=compacted/"))
-    deltaToBaseRatio(fresh.map(_.length).sum, compacted.map(_.length).sum)
+    val entries = DeltaLog.manifest(s"$indexDir/delta", spark.sparkContext.hadoopConfiguration)(
+      s"maintained IVF delta log at $indexDir/delta has no manifest — not a maintained IVF dir")
+    DeltaLog.deltaRatio(entries, DeltaLog.compactedBytes(entries))
   }
 
   /** [[compactIvfMaintained]] gated on [[ivfMaintainedDeltaRatio]]: the
@@ -1168,18 +1010,10 @@ object StreamingOps {
       indexDir: String,
       maxDeltaRatio: Double = 0.25): (Double, Boolean) = {
     require(maxDeltaRatio >= 0, s"maxDeltaRatio must be non-negative, got $maxDeltaRatio")
-    // a missing delta/ under a live index is an interrupted compaction
-    // swap: its ratio is unknowable until the swap completes, and
-    // compactIvfMaintained IS the resume path — finish it unconditionally
-    // instead of throwing the gauge's misleading "not maintained" error
-    val hconf = spark.sparkContext.hadoopConfiguration
-    if (!graft.io.HadoopIO.exists(s"$indexDir/delta", hconf)) {
-      compactIvfMaintained(spark, indexDir)
-      return (Double.NaN, true)
-    }
-    val ratio = ivfMaintainedDeltaRatio(spark, indexDir)
-    if (ratio > maxDeltaRatio) { compactIvfMaintained(spark, indexDir); (ratio, true) }
-    else (ratio, false)
+    // a missing delta/ is an interrupted compaction swap (ratio NaN):
+    // compactIvfMaintained IS the resume path
+    DeltaLog.gate(Seq(s"$indexDir/delta"), Double.NaN, spark.sparkContext.hadoopConfiguration)(
+      ivfMaintainedDeltaRatio(spark, indexDir))(_ > maxDeltaRatio)(compactIvfMaintained(spark, indexDir))
   }
 
   /** Re-train signal for a maintained IVF index: the fraction of live ids
@@ -1209,11 +1043,8 @@ object StreamingOps {
       spark: SparkSession, indexDir: String, what: String,
       winnersOpt: Option[DataFrame] = None): (Long, Double, Long) = {
     import spark.implicits._
-    val meta = graft.knn.Ivf.loadMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no meta sidecar under $indexDir — not a maintained IVF dir"))
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-      .select("cell", "centroid").as[(Int, Seq[Float])].collect()
-      .sortBy(_._1).map(_._2.toArray)
+    val meta = ivfMeta(spark, indexDir)
+    val centroids = loadCentroids(spark, indexDir)
     requireFullPrecisionView(spark, indexDir, what)
     val m = graft.core.Distances.metricId(meta.metric)
     val bc = spark.sparkContext.broadcast(centroids)
@@ -1315,12 +1146,8 @@ object StreamingOps {
     */
   private def writeQuantRef(spark: SparkSession, indexDir: String, err: Double): Unit = {
     import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tmp = s"$indexDir/quant_ref.tmp"
-    graft.io.HadoopIO.delete(tmp, hconf)
-    Seq(err).toDF("ref_err").coalesce(1).write.parquet(tmp)
-    graft.io.HadoopIO.delete(s"$indexDir/quant_ref", hconf)
-    graft.io.HadoopIO.rename(tmp, s"$indexDir/quant_ref", hconf)
+    DeltaLog.replace(s"$indexDir/quant_ref", s"$indexDir/quant_ref.tmp",
+      spark.sparkContext.hadoopConfiguration)(Seq(err).toDF("ref_err").coalesce(1).write.parquet(_))
   }
 
   /** Mean nearest-centroid distance of `vecs` (ONE row per id, `vector`
@@ -1366,10 +1193,10 @@ object StreamingOps {
 
   private def loadIvfQuantReference(spark: SparkSession, indexDir: String): Option[Double] = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    // a surviving tmp with no live sidecar is a torn swap — finish it
-    if (!graft.io.HadoopIO.exists(s"$indexDir/quant_ref", hconf) &&
-        graft.io.HadoopIO.exists(s"$indexDir/quant_ref.tmp", hconf))
-      graft.io.HadoopIO.rename(s"$indexDir/quant_ref.tmp", s"$indexDir/quant_ref", hconf)
+    // a surviving tmp with no live sidecar is a torn swap — finish it (or
+    // drop the torn first write)
+    DeltaLog.resume(s"$indexDir/quant_ref", s"$indexDir/quant_ref.tmp", hconf, DeltaLog.ParquetDone,
+      sidecar = true)
     if (!graft.io.HadoopIO.exists(s"$indexDir/quant_ref", hconf)) None
     else Some(spark.read.parquet(s"$indexDir/quant_ref").head().getDouble(0))
   }
@@ -1475,26 +1302,8 @@ object StreamingOps {
       seed: Long,
       sampleFraction: Double,
       preResolved: Option[DataFrame]): Array[Array[Float]] = {
-    import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tmpDir = s"$indexDir.retrain"
-
-    // resume a swap that crashed between delete and rename: the tmp dir is
-    // only ever renamed after its meta marker (written last) landed
-    if (!graft.io.HadoopIO.exists(indexDir, hconf)) {
-      require(graft.io.HadoopIO.exists(tmpDir, hconf) &&
-        graft.io.HadoopIO.exists(s"$tmpDir/meta", hconf),
-        s"$indexDir does not exist and $tmpDir is absent or incomplete — not a maintained " +
-          "IVF directory (or an unrecoverable state)")
-      graft.io.HadoopIO.rename(tmpDir, indexDir, hconf)
-      return spark.read.parquet(s"$indexDir/centroids")
-        .select("cell", "centroid").as[(Int, Seq[Float])].collect()
-        .sortBy(_._1).map(_._2.toArray)
-    }
-    graft.io.HadoopIO.delete(tmpDir, hconf) // stale tmp from an interrupted build
-
-    val meta = graft.knn.Ivf.loadMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no meta sidecar under $indexDir — not a maintained IVF dir"))
+    if (resumeRetrain(spark, indexDir)) return loadCentroids(spark, indexDir)
+    val meta = ivfMeta(spark, indexDir)
     require(loadIvfPqFlags(spark, indexDir).isEmpty,
       s"index at $indexDir is PQ-maintained — retrain it with retrainIvfPqMaintained (this " +
         "path would silently drop the codes and PQ sidecars from the rebuilt directory)")
@@ -1509,7 +1318,6 @@ object StreamingOps {
       val newC = if (c > 0) c else meta.c
       val centroids = graft.knn.Ivf.train(spark, liveOne.select("id", "vector"), newC,
         meta.metric, iterations, seed = seed, sampleFraction = sampleFraction)
-
       val assigned = graft.knn.Ivf
         .assign(spark, liveOne.select("id", "vector"), centroids, meta.metric, meta.spill)
         .join(liveOne.select(col("id"), col("version")), Seq("id"))
@@ -1517,38 +1325,75 @@ object StreamingOps {
       val tombstones = winners.filter(col("op") === "remove")
         .select(col("id"), lit(-1).as("cell"), lit(null).cast("array<float>").as("vector"),
           col("version"), col("op"))
-      assigned.unionByName(tombstones)
-        .repartition(col("cell")) // files ≈ cells, not tasks × cells
-        .write.partitionBy("cell").parquet(s"$tmpDir/delta/batch=retrained")
-      writeDeltaManifest(s"$tmpDir/delta", hconf)
-      centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-        .toDF("cell", "centroid").coalesce(1)
-        .write.parquet(s"$tmpDir/centroids")
-      // meta last: its presence marks the tmp index complete
-      Seq((meta.metric, meta.spill, centroids.length, meta.dim))
-        .toDF("metric", "spill", "c", "dim").coalesce(1)
-        .write.parquet(s"$tmpDir/meta")
-
-      val hadQuantRef = graft.io.HadoopIO.exists(s"$indexDir/quant_ref", hconf) ||
-        graft.io.HadoopIO.exists(s"$indexDir/quant_ref.tmp", hconf)
-      // the swap drops the old quant_ref with the old directory; an index
-      // that was quant-monitored stays monitored — re-baseline on the
-      // rebuilt geometry (retrainIfQuantDrifted relies on this). Computed
-      // from the STILL-PERSISTED liveOne (same rows, same kernel as a
-      // post-swap ivfMaintainedQuantError) so the retrain does not re-read
-      // the log it just wrote.
-      val newRef = if (hadQuantRef)
-        Some(meanQuantErrorOver(spark, liveOne.select("id", "vector"),
-          centroids, meta.metric))
-      else None
-      graft.io.HadoopIO.delete(indexDir, hconf)
-      graft.io.HadoopIO.rename(tmpDir, indexDir, hconf)
-      newRef.foreach(writeQuantRef(spark, indexDir, _))
-      centroids
+      swapRetrained(spark, indexDir, meta, centroids, assigned.unionByName(tombstones), liveOne)(_ => ())
     } finally {
       liveOne.unpersist()
       if (preResolved.isEmpty) winners.unpersist()
     }
+  }
+
+  /** Resume a retrain swap that crashed between delete and rename (the
+    * `.retrain` tmp is only swapped once its meta marker, written last,
+    * landed), or discard a stale tmp. True when the swap was finished.
+    */
+  private def resumeRetrain(spark: SparkSession, indexDir: String): Boolean =
+    DeltaLog.resume(indexDir, s"$indexDir.retrain", spark.sparkContext.hadoopConfiguration,
+      DeltaLog.marker("meta/_SUCCESS"))
+
+  /** The complete-then-swap tail both retrains share: build the rebuilt
+    * index COMPLETE under `<indexDir>.retrain` — the `rows` delta as one
+    * `batch=retrained` pseudo-batch plus its manifest, the centroids,
+    * `sidecars(tmp)`, and the meta sidecar LAST as the completeness
+    * marker — then swap it over the index directory in one delete+rename:
+    * never a window where new centroids sit over old cell assignments or
+    * vice versa. A crash between delete and rename leaves no index
+    * directory; loads fail loudly and re-running the retrain resumes the
+    * finished swap ([[resumeRetrain]]). An index that was quant-monitored
+    * stays monitored: the reference re-baselines on the rebuilt geometry
+    * from the STILL-PERSISTED `live` view (same rows, same kernel as a
+    * post-swap [[ivfMaintainedQuantError]]), computed before the swap
+    * deletes that view's source. Returns the new centroids.
+    */
+  private def swapRetrained(
+      spark: SparkSession,
+      indexDir: String,
+      meta: graft.knn.Ivf.IvfMeta,
+      centroids: Array[Array[Float]],
+      rows: DataFrame,
+      live: DataFrame)(sidecars: String => Unit): Array[Array[Float]] = {
+    import spark.implicits._
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val tmpDir = s"$indexDir.retrain"
+    graft.io.HadoopIO.delete(tmpDir, hconf)
+    rows.repartition(col("cell")) // files ≈ cells, not tasks × cells
+      .write.partitionBy("cell").parquet(s"$tmpDir/delta/batch=retrained")
+    DeltaLog.seal(s"$tmpDir/delta", hconf)
+    centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
+      .toDF("cell", "centroid").coalesce(1)
+      .write.parquet(s"$tmpDir/centroids")
+    sidecars(tmpDir)
+    Seq((meta.metric, meta.spill, centroids.length, meta.dim))
+      .toDF("metric", "spill", "c", "dim").coalesce(1)
+      .write.parquet(s"$tmpDir/meta")
+    val newRef =
+      if (graft.io.HadoopIO.exists(s"$indexDir/quant_ref", hconf) ||
+          graft.io.HadoopIO.exists(s"$indexDir/quant_ref.tmp", hconf))
+        Some(meanQuantErrorOver(spark, live.select("id", "vector"), centroids, meta.metric))
+      else None
+    DeltaLog.swap(indexDir, tmpDir, hconf, DeltaLog.marker("meta/_SUCCESS"))
+    newRef.foreach(writeQuantRef(spark, indexDir, _))
+    centroids
+  }
+
+  private def ivfMeta(spark: SparkSession, indexDir: String): graft.knn.Ivf.IvfMeta =
+    graft.knn.Ivf.loadMeta(spark, indexDir).getOrElse(
+      throw new IllegalStateException(s"no meta sidecar under $indexDir — not a maintained IVF dir"))
+
+  private def loadCentroids(spark: SparkSession, indexDir: String): Array[Array[Float]] = {
+    import spark.implicits._
+    spark.read.parquet(s"$indexDir/centroids")
+      .select("cell", "centroid").as[(Int, Seq[Float])].collect()
+      .sortBy(_._1).map(_._2.toArray)
   }
 
   /** The closed drift loop in one call: measure [[ivfMaintainedDrift]]
@@ -1602,12 +1447,8 @@ object StreamingOps {
       k: Int,
       nprobe: Int,
       asOf: Option[Long] = None): DataFrame = {
-    import spark.implicits._
-    val meta = graft.knn.Ivf.loadMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no meta sidecar under $indexDir — not a maintained IVF dir"))
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-      .select("cell", "centroid").as[(Int, Seq[Float])].collect()
-      .sortBy(_._1).map(_._2.toArray)
+    val meta = ivfMeta(spark, indexDir)
+    val centroids = loadCentroids(spark, indexDir)
     require(centroids.length == meta.c,
       s"maintained index at $indexDir is torn: sidecar says ${meta.c} centroids, loaded ${centroids.length}")
     queries.foreach { case (qid, qv) =>
@@ -1646,12 +1487,8 @@ object StreamingOps {
       k: Int,
       nprobe: Int,
       asOf: Option[Long] = None): DataFrame = {
-    import spark.implicits._
-    val meta = graft.knn.Ivf.loadMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no meta sidecar under $indexDir — not a maintained IVF dir"))
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-      .select("cell", "centroid").as[(Int, Seq[Float])].collect()
-      .sortBy(_._1).map(_._2.toArray)
+    val meta = ivfMeta(spark, indexDir)
+    val centroids = loadCentroids(spark, indexDir)
     require(centroids.length == meta.c,
       s"maintained index at $indexDir is torn: sidecar says ${meta.c} centroids, loaded ${centroids.length}")
     val checked = queries.select(col("qid").cast("long"),
@@ -1769,36 +1606,36 @@ object StreamingOps {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("id")
         .orderBy(col("version").desc, col("op"), xxhash64(col("vector")))
-      val ops = batch.toDF()
-        .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-        .persist()
-      try {
-        val upserts0 = ops.filter(col("op") === "upsert")
-        // rotate on ingest (one narrow codegen pass) — from here on the
-        // batch lives in the same coordinates as centroids and codebooks
-        val upserts = opq match {
-          case Some(model) => upserts0.withColumn("vector",
-            graft.knn.Opq.rotateCol(model, col("vector")))
-          case None => upserts0
-        }
-        val assigned = graft.knn.Ivf
-          .assign(sess, upserts.select("id", "vector"), centroids, "euclidean", spill)
-        val encoded =
-          (if (residual) graft.knn.Pq.encodeResidual(assigned, centroids, cb)
-           else graft.knn.Pq.encode(assigned, cb))
-            .join(upserts.select(col("id"), col("version")), Seq("id"))
-            .select(col("id"), col("cell"),
-              (if (storeVectors) col("vector") else lit(null).cast("array<float>")).as("vector"),
-              col("pq_codes"), col("version"), lit("upsert").as("op"))
-        val tombstones = ops.filter(col("op") === "remove")
-          .select(col("id"), lit(-1).as("cell"), lit(null).cast("array<float>").as("vector"),
-            lit(null).cast("binary").as("pq_codes"), col("version"), lit("remove").as("op"))
-        encoded.unionByName(tombstones)
-          .repartition(col("cell")) // files ≈ cells per batch, not tasks × cells
-          .write.mode("append").partitionBy("cell").parquet(s"$indexDir/delta/batch=$batchId")
-        mergeDeltaManifest(s"$indexDir/delta", s"batch=$batchId",
-          sess.sparkContext.hadoopConfiguration)
-      } finally ops.unpersist()
+      DeltaLog.commit(sess, Seq(s"$indexDir/delta"), batchId) {
+        val ops = batch.toDF()
+          .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+          .persist()
+        try {
+          val upserts0 = ops.filter(col("op") === "upsert")
+          // rotate on ingest (one narrow codegen pass) — from here on the
+          // batch lives in the same coordinates as centroids and codebooks
+          val upserts = opq match {
+            case Some(model) => upserts0.withColumn("vector",
+              graft.knn.Opq.rotateCol(model, col("vector")))
+            case None => upserts0
+          }
+          val assigned = graft.knn.Ivf
+            .assign(sess, upserts.select("id", "vector"), centroids, "euclidean", spill)
+          val encoded =
+            (if (residual) graft.knn.Pq.encodeResidual(assigned, centroids, cb)
+             else graft.knn.Pq.encode(assigned, cb))
+              .join(upserts.select(col("id"), col("version")), Seq("id"))
+              .select(col("id"), col("cell"),
+                (if (storeVectors) col("vector") else lit(null).cast("array<float>")).as("vector"),
+                col("pq_codes"), col("version"), lit("upsert").as("op"))
+          val tombstones = ops.filter(col("op") === "remove")
+            .select(col("id"), lit(-1).as("cell"), lit(null).cast("array<float>").as("vector"),
+              lit(null).cast("binary").as("pq_codes"), col("version"), lit("remove").as("op"))
+          encoded.unionByName(tombstones)
+            .repartition(col("cell")) // files ≈ cells per batch, not tasks × cells
+            .write.partitionBy("cell").parquet(s"$indexDir/delta/batch=$batchId")
+        } finally ops.unpersist()
+      }
     }
   }
 
@@ -1827,16 +1664,12 @@ object StreamingOps {
       k: Int,
       nprobe: Int,
       overscan: Int = 8): DataFrame = {
-    import spark.implicits._
-    val meta = graft.knn.Ivf.loadMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no meta sidecar under $indexDir — not a maintained IVF dir"))
+    val meta = ivfMeta(spark, indexDir)
     val flags = loadIvfPqFlags(spark, indexDir).getOrElse(
       throw new IllegalStateException(
         s"no pq_maintained sidecar under $indexDir — not a PQ-maintained dir (use " +
           "searchIvfMaintained for a raw-vector maintained index)"))
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-      .select("cell", "centroid").as[(Int, Seq[Float])].collect()
-      .sortBy(_._1).map(_._2.toArray)
+    val centroids = loadCentroids(spark, indexDir)
     val cb = graft.knn.Pq.loadCodebooks(spark, indexDir)
     queries.foreach { case (qid, qv) =>
       require(qv.length == meta.dim,
@@ -1875,16 +1708,12 @@ object StreamingOps {
       k: Int,
       nprobe: Int,
       overscan: Int = 8): DataFrame = {
-    import spark.implicits._
-    val meta = graft.knn.Ivf.loadMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no meta sidecar under $indexDir — not a maintained IVF dir"))
+    val meta = ivfMeta(spark, indexDir)
     val flags = loadIvfPqFlags(spark, indexDir).getOrElse(
       throw new IllegalStateException(
         s"no pq_maintained sidecar under $indexDir — not a PQ-maintained dir (use " +
           "searchIvfMaintainedDF for a raw-vector maintained index)"))
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-      .select("cell", "centroid").as[(Int, Seq[Float])].collect()
-      .sortBy(_._1).map(_._2.toArray)
+    val centroids = loadCentroids(spark, indexDir)
     val cb = graft.knn.Pq.loadCodebooks(spark, indexDir)
     val checked0 = queries.select(col("qid").cast("long"),
       when(size(col("qvec")) === meta.dim, col("qvec"))
@@ -1954,23 +1783,8 @@ object StreamingOps {
       sampleFraction: Double,
       preResolved: Option[DataFrame]): Array[Array[Float]] = {
     import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tmpDir = s"$indexDir.retrain"
-
-    if (!graft.io.HadoopIO.exists(indexDir, hconf)) {
-      require(graft.io.HadoopIO.exists(tmpDir, hconf) &&
-        graft.io.HadoopIO.exists(s"$tmpDir/meta", hconf),
-        s"$indexDir does not exist and $tmpDir is absent or incomplete — not a maintained " +
-          "IVF directory (or an unrecoverable state)")
-      graft.io.HadoopIO.rename(tmpDir, indexDir, hconf)
-      return spark.read.parquet(s"$indexDir/centroids")
-        .select("cell", "centroid").as[(Int, Seq[Float])].collect()
-        .sortBy(_._1).map(_._2.toArray)
-    }
-    graft.io.HadoopIO.delete(tmpDir, hconf)
-
-    val meta = graft.knn.Ivf.loadMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no meta sidecar under $indexDir — not a maintained IVF dir"))
+    if (resumeRetrain(spark, indexDir)) return loadCentroids(spark, indexDir)
+    val meta = ivfMeta(spark, indexDir)
     val flags = loadIvfPqFlags(spark, indexDir).getOrElse(
       throw new IllegalStateException(s"no pq_maintained sidecar under $indexDir — not a PQ-maintained dir"))
     require(flags.storeVectors,
@@ -2032,46 +1846,25 @@ object StreamingOps {
       val tombstones = winners.filter(col("op") === "remove")
         .select(col("id"), lit(-1).as("cell"), lit(null).cast("array<float>").as("vector"),
           lit(null).cast("binary").as("pq_codes"), col("version"), col("op"))
-      encoded.unionByName(tombstones)
-        .repartition(col("cell")) // files ≈ cells, not tasks × cells
-        .write.partitionBy("cell").parquet(s"$tmpDir/delta/batch=retrained")
-      writeDeltaManifest(s"$tmpDir/delta", hconf)
-      centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-        .toDF("cell", "centroid").coalesce(1)
-        .write.parquet(s"$tmpDir/centroids")
-      graft.knn.Pq.saveCodebooks(spark, cbUsed, tmpDir, flags.residual)
-      Seq((flags.residual, flags.storeVectors)).toDF("residual", "store_vectors")
-        .coalesce(1).write.parquet(s"$tmpDir/pq_maintained")
-      // an OPQ-rotated index without refitRotation: the stored vectors
-      // (and the centroids just trained from them) are in ROTATED
-      // coordinates, so the frozen rotation rides along unchanged; with
-      // refitRotation the COMPOSED model (fresh ∘ frozen) is the new
-      // original-space contract
-      refit match {
-        case Some((_, composed)) =>
-          graft.knn.Opq.saveModel(spark, composed, tmpDir)
-        case None =>
-          if (graft.knn.Opq.savedRotation(spark, indexDir))
-            graft.knn.Opq.saveModel(spark, graft.knn.Opq.loadModel(spark, indexDir), tmpDir)
+      // re-baselines from the persisted live view — rotated when the
+      // rotation was refit, exactly what the swapped index stores
+      swapRetrained(spark, indexDir, meta, centroids, encoded.unionByName(tombstones), live) { tmpDir =>
+        graft.knn.Pq.saveCodebooks(spark, cbUsed, tmpDir, flags.residual)
+        Seq((flags.residual, flags.storeVectors)).toDF("residual", "store_vectors")
+          .coalesce(1).write.parquet(s"$tmpDir/pq_maintained")
+        // an OPQ-rotated index without refitRotation: the stored vectors
+        // (and the centroids just trained from them) are in ROTATED
+        // coordinates, so the frozen rotation rides along unchanged; with
+        // refitRotation the COMPOSED model (fresh ∘ frozen) is the new
+        // original-space contract
+        refit match {
+          case Some((_, composed)) =>
+            graft.knn.Opq.saveModel(spark, composed, tmpDir)
+          case None =>
+            if (graft.knn.Opq.savedRotation(spark, indexDir))
+              graft.knn.Opq.saveModel(spark, graft.knn.Opq.loadModel(spark, indexDir), tmpDir)
+        }
       }
-      // meta last: its presence marks the tmp index complete
-      Seq((meta.metric, meta.spill, centroids.length, meta.dim))
-        .toDF("metric", "spill", "c", "dim").coalesce(1)
-        .write.parquet(s"$tmpDir/meta")
-
-      val hadQuantRef = graft.io.HadoopIO.exists(s"$indexDir/quant_ref", hconf) ||
-        graft.io.HadoopIO.exists(s"$indexDir/quant_ref.tmp", hconf)
-      // re-baseline from the already-persisted live view (rotated when the
-      // rotation was refit — exactly what the swapped index stores), not a
-      // re-read of the log the retrain just wrote
-      val newRef = if (hadQuantRef)
-        Some(meanQuantErrorOver(spark, live.select("id", "vector"),
-          centroids, meta.metric))
-      else None
-      graft.io.HadoopIO.delete(indexDir, hconf)
-      graft.io.HadoopIO.rename(tmpDir, indexDir, hconf)
-      newRef.foreach(writeQuantRef(spark, indexDir, _))
-      centroids
     } finally {
       refitPersisted.foreach(_.unpersist())
       liveOne.unpersist()
@@ -2145,44 +1938,18 @@ object StreamingOps {
       numPartitions: Int,
       metric: String = "euclidean",
       config: graft.hnsw.HnswConfig = graft.hnsw.HnswConfig()): (Dataset[VectorOp], Long) => Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
     val passed = HnswMaintainedMeta(numPartitions, metric, config)
-    val deltaDir = s"$indexDir/delta"
-    val baseDir = s"$indexDir/base"
-    loadHnswMaintainedMeta(spark, indexDir) match {
-      case Some(existing) =>
-        require(existing == passed,
-          s"index at $indexDir is already maintained under $existing; restarting the sink " +
-            s"with $passed would change the routing/graph contract old delta rows and base " +
-            "graphs were written under — delete the directory or pass matching parameters")
-        // committed meta implies committed manifests (init seeds them
-        // before meta, compaction rewrites them before its swap): a
-        // missing one is LOST state — or the torn-compaction window whose
-        // documented resume is compactHnswMaintained — and re-seeding it
-        // from a raw listing would bless orphaned half-written batch
-        // files as committed; fail loudly with the right remedy instead
-        requireCommittedManifests("maintained HNSW", indexDir,
-          Seq(deltaDir, baseDir), "compactHnswMaintained", hconf)
-      case None =>
-        // fresh init: seed manifests ONLY where none exists — an adopted
-        // pre-built base (the HnswSpark persist → maintain flow) keeps
-        // its CRC-bearing manifest, which both preserves checksum
-        // verification and keeps orphaned files from a crashed rebuild
-        // REJECTED by the load-time validation instead of silently
-        // blessed by a glob. Then meta LAST as the init commit marker —
-        // a crash above leaves no meta and init re-runs whole.
-        graft.io.HadoopIO.mkdirs(deltaDir, hconf)
-        if (graft.io.Manifest.read(deltaDir, hconf).isEmpty)
-          graft.io.Manifest.write(deltaDir,
-            listDelta(deltaDir, hconf).map { case (rel, len) => graft.io.ManifestEntry(rel, len, -1L) },
-            hconf)
-        graft.io.HadoopIO.mkdirs(baseDir, hconf)
-        if (graft.io.Manifest.read(baseDir, hconf).isEmpty)
-          graft.io.Manifest.write(baseDir,
-            graft.io.HadoopIO.globWithLength(baseDir, "*.hnsw", hconf)
-              .map { case (uri, len) => graft.io.ManifestEntry(graft.io.Manifest.baseName(uri), len, -1L) },
-            hconf)
-        writeHnswMaintainedMeta(spark, indexDir, passed)
+    val existing = loadHnswMaintainedMeta(spark, indexDir)
+    existing.foreach(e => require(e == passed,
+      s"index at $indexDir is already maintained under $e; restarting the sink " +
+        s"with $passed would change the routing/graph contract old delta rows and base " +
+        "graphs were written under — delete the directory or pass matching parameters"))
+    // an adopted pre-built base (the HnswSpark persist → maintain flow)
+    // keeps its CRC-bearing manifest, so orphaned files from a crashed
+    // rebuild stay REJECTED by load-time validation instead of blessed
+    DeltaLog.init(indexDir, Seq(s"$indexDir/delta", s"$indexDir/base"), existing.isEmpty,
+        "maintained HNSW", "compactHnswMaintained", spark.sparkContext.hadoopConfiguration) {
+      writeHnswMaintainedMeta(spark, indexDir, passed)
     }
 
     (batch: Dataset[VectorOp], batchId: Long) => {
@@ -2199,15 +1966,15 @@ object StreamingOps {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("id", "version")
         .orderBy(col("op"), xxhash64(col("vector")))
-      batch.toDF()
-        .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-        .select(col("id"),
-          when(col("op") === "upsert", col("vector")).otherwise(lit(null).cast("array<float>"))
-            .as("vector"),
-          col("version"), col("op"), lit(false).as("guard"))
-        .write.mode("append").parquet(s"$indexDir/delta/batch=$batchId")
-      mergeDeltaManifest(s"$indexDir/delta", s"batch=$batchId",
-        batch.sparkSession.sparkContext.hadoopConfiguration)
+      DeltaLog.commit(batch.sparkSession, Seq(s"$indexDir/delta"), batchId) {
+        batch.toDF()
+          .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+          .select(col("id"),
+            when(col("op") === "upsert", col("vector")).otherwise(lit(null).cast("array<float>"))
+              .as("vector"),
+            col("version"), col("op"), lit(false).as("guard"))
+          .write.parquet(s"$indexDir/delta/batch=$batchId")
+      }
     }
   }
 
@@ -2220,42 +1987,20 @@ object StreamingOps {
     */
   private def hnswLatestDeltaRows(spark: SparkSession, indexDir: String,
       asOfVersion: Option[Long] = None): DataFrame = {
-    import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
     val deltaDir = s"$indexDir/delta"
-    validateDelta(deltaDir, hconf)
-    if (graft.io.Manifest.read(deltaDir, hconf).get.isEmpty)
-      Seq.empty[(Long, Array[Float], Long, String, Boolean)]
-        .toDF("id", "vector", "version", "op", "guard")
-    else {
-      val delta = spark.read.parquet(deltaDir)
-      val scoped = asOfVersion match {
-        case None => delta
-        case Some(v) =>
-          // Same horizon rule as [[latestDeltaRows]]: compaction collapses
-          // each id's history to its winning row (a guard or tombstone in
-          // `batch=compacted`), so the newest compacted version is the
-          // time-travel floor — at or above it every compacted winner
-          // already satisfies version <= v and base serves the exact at-v
-          // state; below it overwritten/removed history is gone and the
-          // read must fail loudly. (The partition column is int-inferred
-          // while no compacted batch exists — the string cast keeps the
-          // filter well-typed in both layouts.)
-          val floor = delta.filter(col("batch").cast("string") === "compacted")
-            .agg(max(col("version"))).head().get(0)
-          if (floor != null) require(v >= floor.asInstanceOf[Long],
-            s"as-of version $v predates the compaction horizon $floor of $indexDir — history " +
-              "below the newest compacted version was collapsed by compactHnswMaintained and " +
-              "cannot be replayed; keep the delta log un-compacted as far back as reads need")
-          delta.filter(col("version") <= v)
-      }
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("id")
-        .orderBy(col("version").desc, col("op").asc, col("guard").desc, xxhash64(col("vector")))
-      scoped
-        .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-        .select("id", "vector", "version", "op", "guard")
-    }
+    val delta = DeltaLog.read(spark, deltaDir,
+      "id BIGINT, vector ARRAY<FLOAT>, version BIGINT, op STRING, guard BOOLEAN, batch STRING")
+    // same horizon rule as the IVF view: a guard or tombstone in
+    // `batch=compacted` holds each folded id's winner, and base serves the
+    // exact at-v state at or above the horizon (see DeltaLog.asOf)
+    val scoped = asOfVersion.fold(delta)(DeltaLog.asOf(delta, deltaDir, _, indexDir,
+      "compactHnswMaintained", spark.sparkContext.hadoopConfiguration))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("id")
+      .orderBy(col("version").desc, col("op").asc, col("guard").desc, xxhash64(col("vector")))
+    scoped
+      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+      .select("id", "vector", "version", "op", "guard")
   }
 
   /** Search a delta-maintained HNSW directory: base graphs serve every id
@@ -2375,37 +2120,25 @@ object StreamingOps {
   def compactHnswMaintained(spark: SparkSession, indexDir: String): Unit = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val baseDir = s"$indexDir/base"
-    val baseTmp = s"$indexDir/base.compact"
     val deltaDir = s"$indexDir/delta"
-    val deltaTmp = s"$indexDir/delta.compact"
     val meta = loadHnswMaintainedMeta(spark, indexDir).getOrElse(
       throw new IllegalStateException(s"no meta sidecar under $indexDir — not a maintained HNSW dir"))
-
-    // resume half-done swaps: a missing live dir means the crash fell
-    // between its delete and rename, and the tmp was validated complete
-    // before the delete ever ran
-    if (!graft.io.HadoopIO.exists(baseDir, hconf)) {
-      require(graft.io.HadoopIO.exists(baseTmp, hconf),
-        s"neither $baseDir nor $baseTmp exists — not a maintained HNSW directory")
-      require(graft.io.Manifest.read(baseTmp, hconf).isDefined,
-        s"$baseTmp has no manifest but $baseDir is gone — inconsistent state; refusing to resume")
-      graft.io.Manifest.validate(baseTmp,
-        graft.io.HadoopIO.globWithLength(baseTmp, "*.hnsw", hconf), hconf)
-      graft.io.HadoopIO.rename(baseTmp, baseDir, hconf)
+    // a base tmp is complete once its manifest validates against its graphs
+    val baseDone: DeltaLog.Done = (d, c) => graft.io.Manifest.read(d, c).isDefined && {
+      graft.io.Manifest.validate(d, graft.io.HadoopIO.globWithLength(d, "*.hnsw", c), c)
+      true
     }
-    if (!graft.io.HadoopIO.exists(deltaDir, hconf)) {
-      require(graft.io.HadoopIO.exists(deltaTmp, hconf) &&
-        graft.io.Manifest.read(deltaTmp, hconf).isDefined,
-        s"$deltaDir is gone and $deltaTmp is absent or manifest-less — inconsistent state")
-      graft.io.HadoopIO.rename(deltaTmp, deltaDir, hconf)
-      return // the interrupted run had finished its fold; the swap is now complete
-    }
-    graft.io.HadoopIO.delete(baseTmp, hconf) // stale tmps from an interrupted attempt
-    graft.io.HadoopIO.delete(deltaTmp, hconf)
+    // resume half-done swaps: base swaps first, so a finished delta
+    // resume means the interrupted run had completed its fold
+    DeltaLog.resume(baseDir, s"$baseDir.compact", hconf, baseDone)
+    if (DeltaLog.resume(deltaDir, s"$deltaDir.compact", hconf)) return
+    require(graft.io.HadoopIO.exists(baseDir, hconf),
+      s"neither $baseDir nor $baseDir.compact exists — not a maintained HNSW directory")
 
     val winners = hnswLatestDeltaRows(spark, indexDir).persist()
-    try {
+    val (baseTmp, deltaTmp) = try {
       val overriding = winners.filter(!col("guard"))
+      val baseTmp = s"$baseDir.compact"
       graft.hnsw.HnswSpark.copyIndexDir(spark, baseDir, baseTmp)
       // remove-then-insert: idempotent, so re-running a crashed compaction
       // over an already-folded base re-lands the identical state
@@ -2414,20 +2147,13 @@ object StreamingOps {
       graft.hnsw.HnswSpark.appendAndSave(spark,
         overriding.filter(col("op") === "upsert").select("id", "vector"),
         baseTmp, meta.numPartitions, meta.metric, meta.config)
-
-      winners
+      (baseTmp, DeltaLog.stage(deltaDir, hconf)(tmp => winners
         .select(col("id"), lit(null).cast("array<float>").as("vector"), col("version"),
           col("op"), (col("op") === "upsert").as("guard"))
-        .write.parquet(s"$deltaTmp/batch=compacted")
-      writeDeltaManifest(deltaTmp, hconf)
+        .write.parquet(s"$tmp/batch=compacted")))
     } finally winners.unpersist()
-
-    graft.io.Manifest.validate(baseTmp,
-      graft.io.HadoopIO.globWithLength(baseTmp, "*.hnsw", hconf), hconf)
-    graft.io.HadoopIO.delete(baseDir, hconf)
-    graft.io.HadoopIO.rename(baseTmp, baseDir, hconf)
-    graft.io.HadoopIO.delete(deltaDir, hconf)
-    graft.io.HadoopIO.rename(deltaTmp, deltaDir, hconf)
+    DeltaLog.swap(baseDir, baseTmp, hconf, baseDone)
+    DeltaLog.swap(deltaDir, deltaTmp, hconf)
   }
 
   /** [[ivfMaintainedDeltaRatio]]'s HNSW twin: un-compacted delta bytes
@@ -2437,14 +2163,9 @@ object StreamingOps {
     */
   def hnswMaintainedDeltaRatio(spark: SparkSession, indexDir: String): Double = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    val base = graft.io.Manifest.read(s"$indexDir/base", hconf).getOrElse(
-      throw new IllegalStateException(
-        s"$indexDir/base has no manifest — not a maintained HNSW dir"))
-    val delta = graft.io.Manifest.read(s"$indexDir/delta", hconf).getOrElse(
-      throw new IllegalStateException(
-        s"$indexDir/delta has no manifest — not a maintained HNSW dir"))
-    val fresh = delta.filterNot(_.name.startsWith("batch=compacted/"))
-    deltaToBaseRatio(fresh.map(_.length).sum, base.map(_.length).sum)
+    def entries(log: String) = DeltaLog.manifest(s"$indexDir/$log", hconf)(
+      s"$indexDir/$log has no manifest — not a maintained HNSW dir")
+    DeltaLog.deltaRatio(entries("delta"), entries("base").map(_.length).sum)
   }
 
   /** [[compactHnswMaintained]] gated on [[hnswMaintainedDeltaRatio]] —
@@ -2458,18 +2179,11 @@ object StreamingOps {
       indexDir: String,
       maxDeltaRatio: Double = 0.25): (Double, Boolean) = {
     require(maxDeltaRatio >= 0, s"maxDeltaRatio must be non-negative, got $maxDeltaRatio")
-    // either half missing = an interrupted double swap: resume it through
-    // compactHnswMaintained (the ratio is unknowable mid-swap) rather than
-    // throwing the gauge's misleading "not maintained" error
-    val hconf = spark.sparkContext.hadoopConfiguration
-    if (!graft.io.HadoopIO.exists(s"$indexDir/base", hconf) ||
-        !graft.io.HadoopIO.exists(s"$indexDir/delta", hconf)) {
-      compactHnswMaintained(spark, indexDir)
-      return (Double.NaN, true)
-    }
-    val ratio = hnswMaintainedDeltaRatio(spark, indexDir)
-    if (ratio > maxDeltaRatio) { compactHnswMaintained(spark, indexDir); (ratio, true) }
-    else (ratio, false)
+    // either half missing = an interrupted double swap (ratio NaN):
+    // compactHnswMaintained IS the resume path
+    DeltaLog.gate(Seq(s"$indexDir/base", s"$indexDir/delta"), Double.NaN,
+        spark.sparkContext.hadoopConfiguration)(hnswMaintainedDeltaRatio(spark, indexDir))(
+      _ > maxDeltaRatio)(compactHnswMaintained(spark, indexDir))
   }
 
   /** Output mode required by [[latestVectorState]] sinks. */
@@ -2527,7 +2241,10 @@ object StreamingOps {
       withPositions: Boolean = false): (Dataset[DocOp], Long) => Unit = {
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
     import spark.implicits._
-    loadBm25MaintainedMeta(spark, indexDir) match {
+    val docsDir = s"$indexDir/delta_docs"
+    val postDir = s"$indexDir/delta_post"
+    val existing = loadBm25MaintainedMeta(spark, indexDir)
+    existing match {
       case Some((existingB, existingP)) =>
         require(existingB == nBuckets,
           s"index at $indexDir is maintained with nBuckets=$existingB; restarting with " +
@@ -2556,13 +2273,14 @@ object StreamingOps {
             }
           case false => ()
         }
-        Seq((nBuckets, withPositions)).toDF("n_buckets", "positions").coalesce(1)
-          .write.mode("overwrite").parquet(bm25MetaPath(indexDir))
+    }
+    DeltaLog.init(indexDir, Seq(docsDir, postDir), existing.isEmpty, "maintained BM25",
+        "compactBm25Maintained", spark.sparkContext.hadoopConfiguration) {
+      Seq((nBuckets, withPositions)).toDF("n_buckets", "positions").coalesce(1)
+        .write.mode("overwrite").parquet(bm25MetaPath(indexDir))
     }
 
     (batch: Dataset[DocOp], batchId: Long) => {
-      val sess = batch.sparkSession
-      val hconf = sess.sparkContext.hadoopConfiguration
       // within-batch latest-wins (remove beats upsert on a version tie —
       // same conservative convention as the vector sinks); the
       // xxhash64(text) tiebreak makes the winner DETERMINISTIC when a
@@ -2571,73 +2289,72 @@ object StreamingOps {
       // while exact replays dedupe below
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("id").orderBy(col("version").desc, col("op").asc, xxhash64(col("text")))
-      val ops = batch.toDF()
-        .withColumn("__rk", rank().over(w)).filter(col("__rk") === 1).drop("__rk")
-        .dropDuplicates("id", "op")
-        .persist()
-      val upserts = ops.filter(col("op") === "upsert")
-        .select(col("id").as("doc_id"), col("version"),
-          graft.text.TextAnalysis.tokens(col("text")).as("__toks"))
-        .persist()
-      try {
-        // text_hash discriminates conflicting same-version upserts ACROSS
-        // batches deterministically AND keys each winner to exactly its
-        // own posting rows (removes carry 0 — they have no text)
-        val docRows = upserts
-          .select(col("doc_id"), col("version"), lit("upsert").as("op"),
-            size(col("__toks")).cast("long").as("dl"),
-            xxhash64(col("__toks")).as("text_hash"))
-          .unionByName(ops.filter(col("op") === "remove")
-            .select(col("id").as("doc_id"), col("version"), lit("remove").as("op"),
-              lit(0L).as("dl"), lit(0L).as("text_hash")))
-        docRows.write.mode("append").parquet(s"$indexDir/delta_docs/batch=$batchId")
-        mergeDeltaManifest(s"$indexDir/delta_docs", s"batch=$batchId", hconf)
+      // the docs log is the marker: a doc winner never commits without
+      // its posting rows (postings without a winner never match)
+      DeltaLog.commit(batch.sparkSession, Seq(postDir, docsDir), batchId) {
+        val ops = batch.toDF()
+          .withColumn("__rk", rank().over(w)).filter(col("__rk") === 1).drop("__rk")
+          .dropDuplicates("id", "op")
+          .persist()
+        val upserts = ops.filter(col("op") === "upsert")
+          .select(col("id").as("doc_id"), col("version"),
+            graft.text.TextAnalysis.tokens(col("text")).as("__toks"))
+          .persist()
+        try {
+          // text_hash discriminates conflicting same-version upserts ACROSS
+          // batches deterministically AND keys each winner to exactly its
+          // own posting rows (removes carry 0 — they have no text)
+          val docRows = upserts
+            .select(col("doc_id"), col("version"), lit("upsert").as("op"),
+              size(col("__toks")).cast("long").as("dl"),
+              xxhash64(col("__toks")).as("text_hash"))
+            .unionByName(ops.filter(col("op") === "remove")
+              .select(col("id").as("doc_id"), col("version"), lit("remove").as("op"),
+                lit(0L).as("dl"), lit(0L).as("text_hash")))
+          docRows.write.parquet(s"$docsDir/batch=$batchId")
 
-        val explodedPost = upserts
-          .select(col("doc_id"), col("version"), xxhash64(col("__toks")).as("text_hash"),
-            posexplode(col("__toks")).as(Seq("pos", "token")))
-          .groupBy("doc_id", "version", "text_hash", "token")
-        // positional rows cost one long per corpus token — the same trade
-        // as buildIndex(withPositions), paid per O(batch) append
-        val postRows = (if (withPositions)
-            explodedPost.agg(count(lit(1)).as("tf"),
-              sort_array(collect_list(col("pos").cast("long"))).as("positions"))
-          else explodedPost.agg(count(lit(1)).as("tf")))
-          .withColumn("bucket", pmod(xxhash64(col("token")), lit(nBuckets.toLong)))
-        postRows.write.mode("append").partitionBy("bucket")
-          .parquet(s"$indexDir/delta_post/batch=$batchId")
-        mergeDeltaManifest(s"$indexDir/delta_post", s"batch=$batchId", hconf)
-      } finally {
-        upserts.unpersist()
-        ops.unpersist()
+          val explodedPost = upserts
+            .select(col("doc_id"), col("version"), xxhash64(col("__toks")).as("text_hash"),
+              posexplode(col("__toks")).as(Seq("pos", "token")))
+            .groupBy("doc_id", "version", "text_hash", "token")
+          // positional rows cost one long per corpus token — the same trade
+          // as buildIndex(withPositions), paid per O(batch) append
+          val postRows = (if (withPositions)
+              explodedPost.agg(count(lit(1)).as("tf"),
+                sort_array(collect_list(col("pos").cast("long"))).as("positions"))
+            else explodedPost.agg(count(lit(1)).as("tf")))
+            .withColumn("bucket", pmod(xxhash64(col("token")), lit(nBuckets.toLong)))
+          postRows.write.partitionBy("bucket").parquet(s"$postDir/batch=$batchId")
+        } finally {
+          upserts.unpersist()
+          ops.unpersist()
+        }
       }
     }
   }
 
   /** Each document's winning delta rows (tombstones KEPT — serving filters
     * them, compaction must persist them): one shuffle on doc_id over the
-    * manifest-validated delta_docs log. An absent delta_docs dir (nothing
-    * ingested yet) is an empty view, not an error; a PRESENT dir without a
-    * manifest is an error (see [[validateDelta]]).
+    * committed delta_docs log (an empty log is an empty view).
     */
   private def bm25DeltaWinners(spark: SparkSession, indexDir: String): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    if (!graft.io.HadoopIO.exists(s"$indexDir/delta_docs", hconf))
-      return spark.emptyDataset[(Long, Long, String, Long, Long)](
-        org.apache.spark.sql.Encoders.product[(Long, Long, String, Long, Long)])
-        .toDF("doc_id", "version", "op", "dl", "text_hash")
-    validateDelta(s"$indexDir/delta_docs", hconf)
     // text_hash in the order: conflicting same-version upserts from
     // DIFFERENT batches (a malformed stream) resolve deterministically,
     // and serving joins the winner's OWN posting rows by the same hash
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id")
       .orderBy(col("version").desc, col("op").asc, col("text_hash").asc)
-    spark.read.parquet(s"$indexDir/delta_docs")
+    DeltaLog.read(spark, s"$indexDir/delta_docs",
+        "doc_id BIGINT, version BIGINT, op STRING, dl BIGINT, text_hash BIGINT")
       .select("doc_id", "version", "op", "dl", "text_hash")
       .withColumn("__rk", rank().over(w)).filter(col("__rk") === 1).drop("__rk")
       .dropDuplicates("doc_id", "op")
   }
+
+  /** The committed delta posting rows of a maintained BM25 directory. */
+  private def bm25DeltaPostings(spark: SparkSession, indexDir: String): DataFrame =
+    DeltaLog.read(spark, s"$indexDir/delta_post", "doc_id BIGINT, version BIGINT, " +
+      "text_hash BIGINT, token STRING, tf BIGINT, positions ARRAY<BIGINT>, bucket BIGINT")
 
   /** Search a [[bm25MaintenanceSink]] directory: the latest-wins view —
     * base postings for documents no delta winner touched, plus the delta
@@ -2657,7 +2374,6 @@ object StreamingOps {
       k: Int,
       k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
-    import spark.implicits._
     require(k > 0, s"k must be positive, got $k")
     val hconf = spark.sparkContext.hadoopConfiguration
     val (nBuckets, _) = loadBm25MaintainedMeta(spark, indexDir).getOrElse(
@@ -2692,19 +2408,13 @@ object StreamingOps {
           .filter(col("bucket").isin(buckets: _*) && col("token").isin(terms: _*))
           .select("doc_id", "dl", "token", "tf")
           .join(winnerDocs, Seq("doc_id"), "left_anti")
-      val deltaPost =
-        if (!graft.io.HadoopIO.exists(s"$indexDir/delta_post", hconf))
-          basePost.limit(0)
-        else {
-          validateDelta(s"$indexDir/delta_post", hconf)
-          spark.read.parquet(s"$indexDir/delta_post")
-            .filter(col("bucket").isin(buckets: _*) && col("token").isin(terms: _*))
-            .select("doc_id", "version", "text_hash", "token", "tf")
-            .join(upsertWinners.select("doc_id", "version", "text_hash", "dl"),
-              Seq("doc_id", "version", "text_hash"))
-            .dropDuplicates("doc_id", "token") // at-least-once replay appends
-            .select("doc_id", "dl", "token", "tf")
-        }
+      val deltaPost = bm25DeltaPostings(spark, indexDir)
+        .filter(col("bucket").isin(buckets: _*) && col("token").isin(terms: _*))
+        .select("doc_id", "version", "text_hash", "token", "tf")
+        .join(upsertWinners.select("doc_id", "version", "text_hash", "dl"),
+          Seq("doc_id", "version", "text_hash"))
+        .dropDuplicates("doc_id", "token") // at-least-once replay appends
+        .select("doc_id", "dl", "token", "tf")
       val post = basePost.unionByName(deltaPost)
 
       // (n, sum_dl) from base doclen minus overridden docs, plus upsert
@@ -2778,8 +2488,7 @@ object StreamingOps {
           s"adopted base index at $indexDir/base has no positions — phrase reads over " +
             "base documents are impossible")
       }
-      val hasDelta = graft.io.HadoopIO.exists(s"$indexDir/delta_post", hconf)
-      if (hasDelta) validateDelta(s"$indexDir/delta_post", hconf)
+      val deltaPost = bm25DeltaPostings(spark, indexDir)
 
       // one bucket-pruned + token-pushed (doc_id, positions) read per term
       // over the surviving view
@@ -2792,15 +2501,13 @@ object StreamingOps {
             .filter(col("bucket") === lit(bucket) && col("token") === lit(t))
             .select(col("doc_id"), col("positions"))
             .join(winnerDocs, Seq("doc_id"), "left_anti")
-        val delta =
-          if (!hasDelta) base.limit(0)
-          else spark.read.parquet(s"$indexDir/delta_post")
-            .filter(col("bucket") === lit(bucket) && col("token") === lit(t))
-            .select("doc_id", "version", "text_hash", "positions")
-            .join(upsertWinners.select("doc_id", "version", "text_hash"),
-              Seq("doc_id", "version", "text_hash"))
-            .dropDuplicates("doc_id") // at-least-once replay appends
-            .select(col("doc_id"), col("positions"))
+        val delta = deltaPost
+          .filter(col("bucket") === lit(bucket) && col("token") === lit(t))
+          .select("doc_id", "version", "text_hash", "positions")
+          .join(upsertWinners.select("doc_id", "version", "text_hash"),
+            Seq("doc_id", "version", "text_hash"))
+          .dropDuplicates("doc_id") // at-least-once replay appends
+          .select(col("doc_id"), col("positions"))
         base.unionByName(delta)
       }
       val perPhrase = parsed.map { case (qid, terms) =>
@@ -2834,22 +2541,11 @@ object StreamingOps {
     * rows in the un-compacted half simply never match a winner).
     */
   def compactBm25Maintained(spark: SparkSession, indexDir: String): Unit = {
-    import spark.implicits._
     val hconf = spark.sparkContext.hadoopConfiguration
-
-    def resumeOrClear(dir: String): Unit = {
-      val tmp = s"$dir.compact"
-      if (graft.io.HadoopIO.exists(tmp, hconf)) {
-        if (graft.io.Manifest.read(tmp, hconf).isDefined) {
-          // manifest-complete tmp: finish the interrupted swap
-          graft.io.HadoopIO.delete(dir, hconf)
-          graft.io.HadoopIO.rename(tmp, dir, hconf)
-        } else graft.io.HadoopIO.delete(tmp, hconf) // torn write — rebuild
-      }
-    }
-    resumeOrClear(s"$indexDir/delta_docs")
-    resumeOrClear(s"$indexDir/delta_post")
-    if (!graft.io.HadoopIO.exists(s"$indexDir/delta_docs", hconf)) return
+    val docsDir = s"$indexDir/delta_docs"
+    val postDir = s"$indexDir/delta_post"
+    Seq(docsDir, postDir).foreach(d => DeltaLog.resume(d, s"$d.compact", hconf))
+    if (DeltaLog.validate(docsDir, hconf).isEmpty) return // nothing ingested yet
 
     val (nBuckets, withPositions) = loadBm25MaintainedMeta(spark, indexDir).getOrElse(
       throw new IllegalStateException(
@@ -2857,28 +2553,20 @@ object StreamingOps {
 
     val winners = bm25DeltaWinners(spark, indexDir).persist()
     try {
-      val docsTmp = s"$indexDir/delta_docs.compact"
-      winners.select("doc_id", "version", "op", "dl", "text_hash")
-        .write.parquet(s"$docsTmp/batch=compacted")
-      writeDeltaManifest(docsTmp, hconf)
-
-      val postTmp = s"$indexDir/delta_post.compact"
-      validateDelta(s"$indexDir/delta_post", hconf)
+      val docsTmp = DeltaLog.stage(docsDir, hconf)(tmp =>
+        winners.select("doc_id", "version", "op", "dl", "text_hash")
+          .write.parquet(s"$tmp/batch=compacted"))
       val postCols = Seq("doc_id", "version", "text_hash", "token", "tf") ++
         (if (withPositions) Seq("positions") else Seq.empty)
-      spark.read.parquet(s"$indexDir/delta_post")
+      val postTmp = DeltaLog.stage(postDir, hconf)(tmp => bm25DeltaPostings(spark, indexDir)
         .select(postCols.map(col): _*)
         .join(winners.filter(col("op") === "upsert").select("doc_id", "version", "text_hash"),
           Seq("doc_id", "version", "text_hash"))
         .dropDuplicates("doc_id", "version", "text_hash", "token")
         .withColumn("bucket", pmod(xxhash64(col("token")), lit(nBuckets.toLong)))
-        .write.partitionBy("bucket").parquet(s"$postTmp/batch=compacted")
-      writeDeltaManifest(postTmp, hconf)
-
-      graft.io.HadoopIO.delete(s"$indexDir/delta_docs", hconf)
-      graft.io.HadoopIO.rename(docsTmp, s"$indexDir/delta_docs", hconf)
-      graft.io.HadoopIO.delete(s"$indexDir/delta_post", hconf)
-      graft.io.HadoopIO.rename(postTmp, s"$indexDir/delta_post", hconf)
+        .write.partitionBy("bucket").parquet(s"$tmp/batch=compacted"))
+      DeltaLog.swap(docsDir, docsTmp, hconf)
+      DeltaLog.swap(postDir, postTmp, hconf)
     } finally winners.unpersist()
   }
 
@@ -2897,23 +2585,6 @@ object StreamingOps {
       val r = spark.read.parquet(hhMetaPath(indexDir)).select("n", "m", "group").head()
       Some((r.getInt(0), r.getInt(1), Option(r.getString(2))))
     }
-  }
-
-  /** Replace a batch subdirectory's manifest entries wholesale — unlike
-    * [[mergeDeltaManifest]]'s same-name replacement, ALL prior entries
-    * under the batch prefix are dropped first, so a re-written batch
-    * (idempotent replay of an uncommitted attempt, whose part-file names
-    * differ) leaves no stale entries behind.
-    */
-  private def replaceBatchManifest(
-      deltaDir: String,
-      batchSubdir: String,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val prior = graft.io.Manifest.read(deltaDir, conf).getOrElse(Seq.empty)
-    val batchEntries = listDelta(deltaDir, conf, Some(batchSubdir))
-      .map { case (rel, len) => graft.io.ManifestEntry(rel, len, -1L) }
-    graft.io.Manifest.write(deltaDir,
-      prior.filterNot(_.name.startsWith(batchSubdir + "/")) ++ batchEntries, conf)
   }
 
   /** `foreachBatch` sink maintaining PROVABLY-EXACT top-k n-gram heavy
@@ -2955,44 +2626,32 @@ object StreamingOps {
       m: Int,
       groupCol: Option[String]): (DataFrame, Long) => Unit = {
     import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    loadHeavyHittersMeta(spark, indexDir) match {
-      case Some((en, em, eg)) =>
-        require(en == n && em == m && eg == groupCol,
-          s"heavy-hitter state at $indexDir was maintained with (n=$en, m=$em, group=$eg); " +
-            s"restarting with (n=$n, m=$m, group=$groupCol) would merge incompatible " +
-            "sketches — delete the directory or pass matching parameters")
-        requireCommittedManifests("heavy-hitter", indexDir,
-          Seq(s"$indexDir/sketch", s"$indexDir/docs"),
-          "compactHeavyHitters", hconf)
-        // refuse to append array-format batches into a pre-upgrade
-        // row-per-gram sketch log — a mixed-format dir would be unreadable
-        if (graft.io.Manifest.read(s"$indexDir/sketch", hconf).exists(_.nonEmpty))
-          requireArraySketchFormat(
-            hhReadManifested(spark, s"$indexDir/sketch"), s"$indexDir/sketch")
-      case None =>
-        // fresh init: seed both manifests, meta LAST as the commit marker
-        seedDeltaManifests(Seq(s"$indexDir/sketch", s"$indexDir/docs"), hconf)
-        Seq((n, m, groupCol)).toDF("n", "m", "group").coalesce(1)
-          .write.mode("overwrite").parquet(hhMetaPath(indexDir))
-    }
     val sketchDir = s"$indexDir/sketch"
     val docsDir = s"$indexDir/docs"
+    val existing = loadHeavyHittersMeta(spark, indexDir)
+    existing.foreach { case (en, em, eg) =>
+      require(en == n && em == m && eg == groupCol,
+        s"heavy-hitter state at $indexDir was maintained with (n=$en, m=$em, group=$eg); " +
+          s"restarting with (n=$n, m=$m, group=$groupCol) would merge incompatible " +
+          "sketches — delete the directory or pass matching parameters")
+    }
+    DeltaLog.init(indexDir, Seq(sketchDir, docsDir), existing.isEmpty, "heavy-hitter",
+        "compactHeavyHitters", spark.sparkContext.hadoopConfiguration) {
+      Seq((n, m, groupCol)).toDF("n", "m", "group").coalesce(1)
+        .write.mode("overwrite").parquet(hhMetaPath(indexDir))
+    }
+    // refuse to append array-format batches into a pre-upgrade
+    // row-per-gram sketch log — a mixed-format dir would be unreadable
+    DeltaLog.rows(spark, sketchDir).foreach(requireArraySketchFormat(_, sketchDir))
 
     (batch: DataFrame, batchId: Long) => {
       val sess = batch.sparkSession
       import sess.implicits._
-      val conf = sess.sparkContext.hadoopConfiguration
       // committed = present in the sketch manifest (the commit marker) OR
       // already folded away by compactHeavyHitters (whose sidecar
       // remembers folded batch ids exactly so a post-compaction replay of
       // an old micro-batch cannot re-append and double-count)
-      val committed = graft.io.Manifest.read(sketchDir, conf).getOrElse(Seq.empty)
-        .exists(_.name.startsWith(s"batch=$batchId/")) ||
-        foldedBatchIds(sess, indexDir).contains(batchId)
-      if (!committed) {
-        graft.io.HadoopIO.delete(s"$docsDir/batch=$batchId", conf)
-        graft.io.HadoopIO.delete(s"$sketchDir/batch=$batchId", conf)
+      DeltaLog.commit(sess, Seq(docsDir, sketchDir), batchId, folded = Some(indexDir)) {
         // ONE row per (batch, group) with the summary's (gram, count) pairs
         // as aligned arrays — not one row per tracked gram. The summary is
         // groups × m entries; a row-per-gram layout made the driver encode
@@ -3034,9 +2693,6 @@ object StreamingOps {
           }
         sketchRows.toDF("grp", "grams", "cnts", "err", "total")
           .coalesce(1).write.parquet(s"$sketchDir/batch=$batchId")
-        replaceBatchManifest(docsDir, s"batch=$batchId", conf)
-        // sketch manifest LAST = the commit marker
-        replaceBatchManifest(sketchDir, s"batch=$batchId", conf)
       }
     }
   }
@@ -3062,32 +2718,6 @@ object StreamingOps {
       groupCol: String): (DataFrame, Long) => Unit =
     heavyHittersSinkImpl(spark, indexDir, n, m, Some(groupCol))
 
-  /** Exact top-k over everything a [[heavyHittersSink]] directory has
-    * absorbed: fold the per-batch Misra–Gries summaries (mergeable — the
-    * combined summary carries the same `true ∈ [cnt, cnt+err]` guarantee
-    * as a single-pass sketch), then run the identical exact recount +
-    * proof over the accumulated corpus. Exact or a loud error, never
-    * silently approximate.
-    */
-  /** Read a heavy-hitter delta dir restricted to its MANIFEST-LISTED
-    * files — the manifest is the sink's commit marker, so this is the
-    * committed view. Reading the directory wholesale would also sweep up
-    * an in-flight or crashed-uncommitted batch's files: for the
-    * count-accumulating heavy-hitter tables that is not a harmless
-    * latest-wins duplicate (as in the versioned delta logs) but a
-    * half-committed batch whose docs are counted while its sketch is
-    * missing — silently breaking the exact-or-throw proof. `basePath`
-    * keeps the `batch=` partition-column discovery identical to a
-    * whole-directory read. Caller must have run [[validateDelta]] and
-    * checked the manifest non-empty (zero paths cannot be read).
-    */
-  private def hhReadManifested(spark: SparkSession, dir: String): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val files = graft.io.Manifest.read(dir, hconf).get.map(e => s"$dir/${e.name}")
-    require(files.nonEmpty, s"hhReadManifested on empty manifest at $dir")
-    spark.read.option("basePath", dir).parquet(files: _*)
-  }
-
   /** Fail-loud format guard: the sketch sidecar moved from one row per
     * (grp, gram) — columns (grp, gram, cnt, err, total) — to one row per
     * (batch, group) with (grams, cnts) ARRAYS. Silently reading an
@@ -3105,13 +2735,14 @@ object StreamingOps {
   /** Per-batch summaries keyed by group (the global form lives under the
     * None key), folded across batches — batches × groups × m rows on the
     * driver, bounded by sketch size and fold cadence, never corpus size.
-    * Reads only the sketch manifest's committed files ([[hhReadManifested]]).
+    * Reads only the sketch log's committed batches ([[DeltaLog.read]]).
     */
   private def hhFoldSketches(spark: SparkSession, sketchDir: String,
       m: Int): Map[Option[String], graft.text.HeavyHitters.MgSummary] = {
     // one row per (batch, group), counts as aligned arrays — each row is a
     // self-contained summary (no separate meta row to cross-check)
-    val raw = hhReadManifested(spark, sketchDir)
+    val raw = DeltaLog.rows(spark, sketchDir).getOrElse(
+      throw new IllegalStateException(s"empty sketch log at $sketchDir has nothing to fold"))
     requireArraySketchFormat(raw, sketchDir)
     val perBatch = raw
       .select(col("batch").cast("string"), col("grp"), col("grams"),
@@ -3139,32 +2770,15 @@ object StreamingOps {
     }
   }
 
-  def heavyHittersTopK(spark: SparkSession, indexDir: String, k: Int): DataFrame = {
-    import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val (n, m, group) = loadHeavyHittersMeta(spark, indexDir).getOrElse(
-      throw new IllegalStateException(
-        s"no hh_meta sidecar under $indexDir — not a maintained heavy-hitter dir"))
-    require(group.isEmpty,
-      s"$indexDir is maintained GROUPED (by '${group.get}') — read it with heavyHittersTopKByGroup")
-    require(m > k, s"sketch size m ($m) must exceed k ($k)")
-    val sketchDir = s"$indexDir/sketch"
-    val docsDir = s"$indexDir/docs"
-    validateDelta(sketchDir, hconf)
-    validateDelta(docsDir, hconf)
-    if (graft.io.Manifest.read(sketchDir, hconf).get.isEmpty)
-      return Seq.empty[(String, Long, Int)].toDF("gram", "n_count", "rank")
-    val mg = hhFoldSketches(spark, sketchDir, m)
-      .getOrElse(None, graft.text.HeavyHitters.MgSummary(Map.empty, 0L, 0L))
-    val docsEntries = graft.io.Manifest.read(docsDir, hconf).get
-    val key = hhCacheKey(k, n, m, None, Map(None -> mg), docsEntries)
-    hhCachedRecount(spark, indexDir, key) {
-      val docs =
-        if (docsEntries.isEmpty) Seq.empty[(Long, String)].toDF("doc_id", "text")
-        else hhReadManifested(spark, docsDir).select("doc_id", "text")
-      graft.text.HeavyHitters.recountAndProve(docs, n, k, m, mg)
-    }
-  }
+  /** Exact top-k over everything a [[heavyHittersSink]] directory has
+    * absorbed: fold the per-batch Misra–Gries summaries (mergeable — the
+    * combined summary carries the same `true ∈ [cnt, cnt+err]` guarantee
+    * as a single-pass sketch), then run the identical exact recount +
+    * proof over the accumulated corpus. Exact or a loud error, never
+    * silently approximate.
+    */
+  def heavyHittersTopK(spark: SparkSession, indexDir: String, k: Int): DataFrame =
+    hhTopK(spark, indexDir, k, grouped = false)
 
   /** Exact top-k PER GROUP over everything a [[heavyHittersSinkByGroup]]
     * directory has absorbed — the C4/Gopher corpus report maintained
@@ -3173,30 +2787,39 @@ object StreamingOps {
     * against the accumulated corpus, and applies the per-group
     * exact-or-throw proof. Returns (grp, gram, n_count, rank).
     */
-  def heavyHittersTopKByGroup(spark: SparkSession, indexDir: String, k: Int): DataFrame = {
+  def heavyHittersTopKByGroup(spark: SparkSession, indexDir: String, k: Int): DataFrame =
+    hhTopK(spark, indexDir, k, grouped = true)
+
+  private def hhTopK(spark: SparkSession, indexDir: String, k: Int, grouped: Boolean): DataFrame = {
     import spark.implicits._
     val hconf = spark.sparkContext.hadoopConfiguration
     val (n, m, group) = loadHeavyHittersMeta(spark, indexDir).getOrElse(
       throw new IllegalStateException(
         s"no hh_meta sidecar under $indexDir — not a maintained heavy-hitter dir"))
-    require(group.isDefined,
+    if (grouped) require(group.isDefined,
       s"$indexDir is maintained GLOBAL — read it with heavyHittersTopK")
+    else require(group.isEmpty,
+      s"$indexDir is maintained GROUPED (by '${group.get}') — read it with heavyHittersTopKByGroup")
     require(m > k, s"sketch size m ($m) must exceed k ($k)")
     val sketchDir = s"$indexDir/sketch"
     val docsDir = s"$indexDir/docs"
-    validateDelta(sketchDir, hconf)
-    validateDelta(docsDir, hconf)
-    if (graft.io.Manifest.read(sketchDir, hconf).get.isEmpty)
-      return Seq.empty[(String, String, Long, Int)].toDF("grp", "gram", "n_count", "rank")
+    val sketched = DeltaLog.validate(sketchDir, hconf).nonEmpty
+    val docsEntries = DeltaLog.validate(docsDir, hconf)
+    if (!sketched) return {
+      if (grouped) Seq.empty[(String, String, Long, Int)].toDF("grp", "gram", "n_count", "rank")
+      else Seq.empty[(String, Long, Int)].toDF("gram", "n_count", "rank")
+    }
     val folded = hhFoldSketches(spark, sketchDir, m)
-    val mg = folded.collect { case (Some(grp), s) => (grp, s) } // None key = batch markers
-    val docsEntries = graft.io.Manifest.read(docsDir, hconf).get
-    val key = hhCacheKey(k, n, m, group, folded, docsEntries)
+    val global = folded.getOrElse(None, graft.text.HeavyHitters.MgSummary(Map.empty, 0L, 0L))
+    val key = hhCacheKey(k, n, m, group, if (grouped) folded else Map(None -> global), docsEntries)
     hhCachedRecount(spark, indexDir, key) {
-      val docs =
-        if (docsEntries.isEmpty) Seq.empty[(Long, String, String)].toDF("doc_id", "grp", "text")
-        else hhReadManifested(spark, docsDir).select("doc_id", "grp", "text")
-      graft.text.HeavyHitters.recountAndProveByGroup(docs, n, k, m, mg, "grp")
+      if (grouped) graft.text.HeavyHitters.recountAndProveByGroup(
+        DeltaLog.read(spark, docsDir, "doc_id BIGINT, grp STRING, text STRING")
+          .select("doc_id", "grp", "text"),
+        n, k, m, folded.collect { case (Some(grp), s) => (grp, s) }, "grp")
+      else graft.text.HeavyHitters.recountAndProve(
+        DeltaLog.read(spark, docsDir, "doc_id BIGINT, text STRING").select("doc_id", "text"),
+        n, k, m, global)
     }
   }
 
@@ -3256,41 +2879,14 @@ object StreamingOps {
       if (graft.io.HadoopIO.exists(keyPath, hconf))
         scala.util.Try(graft.io.HadoopIO.read(keyPath, hconf)(_.readUTF())).toOption
       else None
-    if (stored.contains(key)) localized(spark.read.parquet(s"$cacheDir/rows"))
-    else {
+    if (!stored.contains(key)) {
       val result = compute
-      val tmp = s"$indexDir/cache.tmp"
-      graft.io.HadoopIO.delete(tmp, hconf)
-      result.coalesce(1).write.parquet(s"$tmp/rows")
-      graft.io.HadoopIO.write(s"$tmp/_key", hconf)(_.writeUTF(key))
-      graft.io.HadoopIO.delete(cacheDir, hconf)
-      graft.io.HadoopIO.rename(tmp, cacheDir, hconf)
-      localized(spark.read.parquet(s"$cacheDir/rows"))
+      DeltaLog.replace(cacheDir, s"$indexDir/cache.tmp", hconf, DeltaLog.marker("_key")) { tmp =>
+        result.coalesce(1).write.parquet(s"$tmp/rows")
+        graft.io.HadoopIO.write(s"$tmp/_key", hconf)(_.writeUTF(key))
+      }
     }
-  }
-
-  private def foldedBatchIds(spark: SparkSession, indexDir: String): Set[Long] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val live = {
-      val d = s"$indexDir/folded"
-      if (!graft.io.HadoopIO.exists(d, hconf)) Set.empty[Long]
-      else spark.read.parquet(d).select("batch_id").collect().map(_.getLong(0)).toSet
-    }
-    // also honor a surviving folded.tmp: it is the COMPLETE successor
-    // sidecar (old ids ∪ the ids being folded) from a compaction whose
-    // delete+rename swap was interrupted — every id in it is committed, so
-    // treating it as folded is always safe, and without it a crash between
-    // the delete and the rename would lose the replay guard entirely. A
-    // torn tmp (crash mid-write) is ignored — it never renamed, and the
-    // batches it would have listed are still in the sketch manifest.
-    val tmp = {
-      val d = s"$indexDir/folded.tmp"
-      if (!graft.io.HadoopIO.exists(d, hconf)) Set.empty[Long]
-      else scala.util.Try(
-        spark.read.parquet(d).select("batch_id").collect().map(_.getLong(0)).toSet
-      ).getOrElse(Set.empty[Long])
-    }
-    live ++ tmp
+    localized(spark.read.parquet(s"$cacheDir/rows"))
   }
 
   /** Compact a [[heavyHittersSink]] sketch log: fold the per-batch
@@ -3309,81 +2905,12 @@ object StreamingOps {
     * swap leaves batches both listed and still present — the sink skips
     * them either way.)
     */
-  /** The ONE copy of the delta-log compaction crash protocol, shared by
-    * [[compactHeavyHitters]] and [[compactTokenBudget]] (a protocol this
-    * subtle must not exist twice — a fix to one crash window that misses
-    * a hand-kept twin re-opens the double-count replay hazard there).
-    * `compute()` runs while the live log is still untouched (a failure
-    * there changes nothing) and returns the writer that materializes the
-    * folded `batch=compacted` content under the swap tmp. Sequence, and
-    * the crash window each step covers:
-    *
-    *  1. resume a torn FOLDED-sidecar swap (missing live sidecar +
-    *     surviving tmp → complete the rename first) — the guard's only
-    *     copy of the previously folded ids must never be deleted;
-    *  2. resume a torn directory swap (missing live dir + manifest-
-    *     complete tmp → finish the rename and return);
-    *  3. fold-compute over the live log (failure leaves everything
-    *     untouched); batch ids come straight off the live manifest — the
-    *     committed set, no Spark job, no uncommitted stray dir leaks in;
-    *  4. replay-guard sidecar: every numeric batch id being folded plus
-    *     all previously folded land via tmp + delete + rename, BEFORE
-    *     the destructive swap — never overwrite-in-place, whose
-    *     delete-then-write window would lose every previously folded id
-    *     and re-open the post-compaction double-count replay
-    *     (foldedBatchIds reads a surviving tmp, so every crash point in
-    *     this swap keeps the guard intact);
-    *  5. write the compacted content + completeness manifest under tmp,
-    *     delete the live dir, rename tmp over it — a crash between the
-    *     delete and the rename is resumed by step 2 on the next call. A
-    *     crash between steps 4 and 5 leaves batches both listed and
-    *     still present; consumers skip them either way.
-    */
-  private def compactDeltaLog(
-      spark: SparkSession,
-      indexDir: String,
-      liveName: String,
-      compute: () => (String => Unit)): Unit = {
-    import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val liveDir = s"$indexDir/$liveName"
-    val tmpDir = s"$indexDir/$liveName.compact"
-    if (!graft.io.HadoopIO.exists(s"$indexDir/folded", hconf) &&
-        graft.io.HadoopIO.exists(s"$indexDir/folded.tmp", hconf))
-      graft.io.HadoopIO.rename(s"$indexDir/folded.tmp", s"$indexDir/folded", hconf)
-    if (!graft.io.HadoopIO.exists(liveDir, hconf)) {
-      require(graft.io.HadoopIO.exists(tmpDir, hconf) &&
-        graft.io.Manifest.read(tmpDir, hconf).isDefined,
-        s"$liveDir is gone and $tmpDir is absent or manifest-less — inconsistent state")
-      graft.io.HadoopIO.rename(tmpDir, liveDir, hconf)
-      return
-    }
-    graft.io.HadoopIO.delete(tmpDir, hconf)
-    validateDelta(liveDir, hconf)
-    if (graft.io.Manifest.read(liveDir, hconf).get.isEmpty) return
-    val batchKeys = graft.io.Manifest.read(liveDir, hconf).get
-      .map(_.name.takeWhile(_ != '/').stripPrefix("batch=")).distinct
-    val numericIds = batchKeys.filter(s => s.nonEmpty && s.forall(_.isDigit))
-      .map(_.toLong).toSet
-    val write = compute()
-    val allFolded = foldedBatchIds(spark, indexDir) ++ numericIds
-    val foldedTmp = s"$indexDir/folded.tmp"
-    graft.io.HadoopIO.delete(foldedTmp, hconf)
-    allFolded.toSeq.sorted.toDF("batch_id").coalesce(1).write.parquet(foldedTmp)
-    graft.io.HadoopIO.delete(s"$indexDir/folded", hconf)
-    graft.io.HadoopIO.rename(foldedTmp, s"$indexDir/folded", hconf)
-    write(tmpDir)
-    writeDeltaManifest(tmpDir, hconf)
-    graft.io.HadoopIO.delete(liveDir, hconf)
-    graft.io.HadoopIO.rename(tmpDir, liveDir, hconf)
-  }
-
   def compactHeavyHitters(spark: SparkSession, indexDir: String): Unit = {
     import spark.implicits._
     val (_, m, _) = loadHeavyHittersMeta(spark, indexDir).getOrElse(
       throw new IllegalStateException(
         s"no hh_meta sidecar under $indexDir — not a maintained heavy-hitter dir"))
-    compactDeltaLog(spark, indexDir, "sketch", () => {
+    DeltaLog.fold(spark, indexDir, "sketch")(() => {
       val folded = hhFoldSketches(spark, s"$indexDir/sketch", m)
       // an all-empty fold still writes one empty summary row so the
       // compacted batch file is never schema-less
@@ -3405,14 +2932,10 @@ object StreamingOps {
     * read-time driver fold costs batches × groups × m rows, so this IS
     * the fold-cost gauge.
     */
-  def heavyHittersSketchBatches(spark: SparkSession, indexDir: String): Int = {
-    val entries = graft.io.Manifest.read(s"$indexDir/sketch",
-      spark.sparkContext.hadoopConfiguration).getOrElse(
-      throw new IllegalStateException(
-        s"heavy-hitter sketch log at $indexDir/sketch has no manifest — " +
-          "not a maintained heavy-hitter dir"))
-    entries.map(_.name.takeWhile(_ != '/')).distinct.size
-  }
+  def heavyHittersSketchBatches(spark: SparkSession, indexDir: String): Int =
+    DeltaLog.batchKeys(DeltaLog.manifest(s"$indexDir/sketch", spark.sparkContext.hadoopConfiguration)(
+      s"heavy-hitter sketch log at $indexDir/sketch has no manifest — " +
+        "not a maintained heavy-hitter dir")).size
 
   /** [[compactHeavyHitters]] gated on [[heavyHittersSketchBatches]]: the
     * one-call maintenance form — fold the sketch log only when more than
@@ -3426,75 +2949,10 @@ object StreamingOps {
   def compactHeavyHittersIfNeeded(
       spark: SparkSession,
       indexDir: String,
-      maxBatches: Int = 64): (Int, Boolean) =
-    gatedCompact(spark, indexDir, "sketch", maxBatches,
-      () => heavyHittersSketchBatches(spark, indexDir),
-      () => compactHeavyHitters(spark, indexDir))
-
-  /** ONE copy of the "committed meta implies committed manifests"
-    * contract every maintained sink's restart path enforces: a
-    * meta-committed directory missing a delta manifest is LOST state (or
-    * a torn compaction swap, whose documented resume is the named
-    * compaction call) — re-seeding it from a raw listing would bless
-    * orphaned half-written batch files as committed, so refuse loudly.
-    */
-  private def requireCommittedManifests(
-      what: String,
-      indexDir: String,
-      dirs: Seq[String],
-      resumeCall: String,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val missing = dirs.filter(d => graft.io.Manifest.read(d, conf).isEmpty)
-    require(missing.isEmpty,
-      s"$what dir $indexDir has committed meta but no manifest under " +
-        s"[${missing.map(_.stripPrefix(indexDir + "/")).mkString(", ")}] — either lost/foreign " +
-        s"state, or a compaction swap died mid-flight (run $resumeCall to resume it); " +
-        "refusing to extend unverifiable state")
-  }
-
-  /** ONE copy of the fresh-init manifest seeding the maintained sinks
-    * share (written BEFORE the meta sidecar, which is the init commit
-    * marker): each dir gets a manifest of whatever it currently lists —
-    * empty for a new dir, the crashed-init files for a re-run init. A
-    * dir that ALREADY carries a manifest (copied/adopted state, or a
-    * crash after manifest seeding) is preserved untouched — overwriting
-    * it with -1-CRC raw-listing entries would bless whatever files
-    * happen to be present, discarding CRC evidence the existing manifest
-    * carries (the same preserve-existing rule as the HNSW fresh init).
-    */
-  private def seedDeltaManifests(
-      dirs: Seq[String],
-      conf: org.apache.hadoop.conf.Configuration): Unit =
-    dirs.foreach { d =>
-      graft.io.HadoopIO.mkdirs(d, conf)
-      if (graft.io.Manifest.read(d, conf).isEmpty)
-        graft.io.Manifest.write(d,
-          listDelta(d, conf).map { case (rel, len) => graft.io.ManifestEntry(rel, len, -1L) },
-          conf)
-    }
-
-  /** The shared gate for the compaction wrappers: a missing live dir
-    * under a maintained root is an interrupted compaction swap — the
-    * compaction IS the resume path, so finish it unconditionally instead
-    * of throwing the gauge's misleading error; otherwise compact only
-    * past the manifest batch threshold.
-    */
-  private def gatedCompact(
-      spark: SparkSession,
-      indexDir: String,
-      liveName: String,
-      maxBatches: Int,
-      gauge: () => Int,
-      compact: () => Unit): (Int, Boolean) = {
+      maxBatches: Int = 64): (Int, Boolean) = {
     require(maxBatches >= 1, s"maxBatches must be >= 1, got $maxBatches")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    if (!graft.io.HadoopIO.exists(s"$indexDir/$liveName", hconf)) {
-      compact()
-      return (-1, true)
-    }
-    val batches = gauge()
-    if (batches > maxBatches) { compact(); (batches, true) }
-    else (batches, false)
+    DeltaLog.gate(Seq(s"$indexDir/sketch"), -1, spark.sparkContext.hadoopConfiguration)(
+      heavyHittersSketchBatches(spark, indexDir))(_ > maxBatches)(compactHeavyHitters(spark, indexDir))
   }
 
   // ------------------------------------------- token-budget admission sink
@@ -3574,44 +3032,32 @@ object StreamingOps {
     require(budgetRows.map(_._1).distinct.length == budgetRows.length,
       "budgets must carry one row per source")
     require(budgetRows.forall(_._2 >= 0), s"budgets must be >= 0: ${budgetRows.toSeq}")
-    val hconf = spark.sparkContext.hadoopConfiguration
     val admittedDir = s"$indexDir/admitted"
     val totalsDir = s"$indexDir/totals"
-    loadTokenBudgetMeta(spark, indexDir) match {
-      case Some((eb, es)) =>
-        require(eb == budgetRows.toMap && es == seed,
-          s"token-budget state at $indexDir was maintained with (budgets=$eb, seed=$es); " +
-            s"restarting with (budgets=${budgetRows.toMap}, seed=$seed) would change who was " +
-            "admitted retroactively — delete the directory or pass matching parameters")
-        requireCommittedManifests("token-budget", indexDir,
-          Seq(admittedDir, totalsDir), "compactTokenBudget", hconf)
-      case None =>
-        // fresh init: seed both manifests, meta LAST as the commit marker
-        seedDeltaManifests(Seq(admittedDir, totalsDir), hconf)
-        budgetRows.toSeq.map { case (g, b) => (g, b, seed) }
-          .toDF("source", "budget", "seed").coalesce(1)
-          .write.mode("overwrite").parquet(tokenBudgetMetaPath(indexDir))
+    val existing = loadTokenBudgetMeta(spark, indexDir)
+    existing.foreach { case (eb, es) =>
+      require(eb == budgetRows.toMap && es == seed,
+        s"token-budget state at $indexDir was maintained with (budgets=$eb, seed=$es); " +
+          s"restarting with (budgets=${budgetRows.toMap}, seed=$seed) would change who was " +
+          "admitted retroactively — delete the directory or pass matching parameters")
+    }
+    DeltaLog.init(indexDir, Seq(admittedDir, totalsDir), existing.isEmpty, "token-budget",
+        "compactTokenBudget", spark.sparkContext.hadoopConfiguration) {
+      budgetRows.toSeq.map { case (g, b) => (g, b, seed) }
+        .toDF("source", "budget", "seed").coalesce(1)
+        .write.mode("overwrite").parquet(tokenBudgetMetaPath(indexDir))
     }
 
     (batch: DataFrame, batchId: Long) => {
       val sess = batch.sparkSession
       import sess.implicits._
-      val conf = sess.sparkContext.hadoopConfiguration
       // committed = present in the totals manifest (the commit marker) OR
       // already folded away by compactTokenBudget (whose sidecar remembers
       // folded batch ids exactly so a post-compaction replay of an old
       // micro-batch cannot re-admit and double-count tokens)
-      val committed = graft.io.Manifest.read(totalsDir, conf).getOrElse(Seq.empty)
-        .exists(_.name.startsWith(s"batch=$batchId/")) ||
-        foldedBatchIds(sess, indexDir).contains(batchId)
-      if (!committed) {
-        graft.io.HadoopIO.delete(s"$admittedDir/batch=$batchId", conf)
-        graft.io.HadoopIO.delete(s"$totalsDir/batch=$batchId", conf)
-        val priorDf =
-          if (graft.io.Manifest.read(totalsDir, conf).get.isEmpty)
-            Seq.empty[(String, Long)].toDF("source", "__prior")
-          else hhReadManifested(sess, totalsDir)
-            .groupBy("source").agg(sum("batch_toks").as("__prior"))
+      DeltaLog.commit(sess, Seq(admittedDir, totalsDir), batchId, folded = Some(indexDir)) {
+        val priorDf = DeltaLog.read(sess, totalsDir, "source STRING, batch_toks BIGINT")
+          .groupBy("source").agg(sum("batch_toks").as("__prior"))
         // budgets (inner: absent sources drop) and prior totals (left:
         // a source's first batch has none) join instead of CASE chains —
         // source cardinality only sizes the broadcasts
@@ -3638,9 +3084,6 @@ object StreamingOps {
           admitted.groupBy("source").agg(sum("n_tok").as("batch_toks"))
             .unionByName(Seq(("", 0L)).toDF("source", "batch_toks"))
             .coalesce(1).write.parquet(s"$totalsDir/batch=$batchId")
-          replaceBatchManifest(admittedDir, s"batch=$batchId", conf)
-          // totals manifest LAST = the commit marker
-          replaceBatchManifest(totalsDir, s"batch=$batchId", conf)
         } finally admitted.unpersist()
       }
     }
@@ -3656,25 +3099,13 @@ object StreamingOps {
     * rows are invisible until its redelivery commits them.
     */
   def tokenBudgetAdmitted(spark: SparkSession, indexDir: String): DataFrame = {
-    import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
     require(loadTokenBudgetMeta(spark, indexDir).isDefined,
       s"no tb_meta sidecar under $indexDir — not a token-budget admission dir")
-    val admittedDir = s"$indexDir/admitted"
-    val totalsDir = s"$indexDir/totals"
-    validateDelta(admittedDir, hconf)
-    validateDelta(totalsDir, hconf)
-    val committedBatches = graft.io.Manifest.read(totalsDir, hconf).get
-      .map(_.name.takeWhile(_ != '/')).toSet ++
-      foldedBatchIds(spark, indexDir).map(id => s"batch=$id")
-    if (committedBatches.isEmpty)
-      return Seq.empty[(Long, String, Long)].toDF("doc_id", "source", "n_tok")
-    val committedFiles = graft.io.Manifest.read(admittedDir, hconf).get
-      .filter(e => committedBatches(e.name.takeWhile(_ != '/')))
-      .map(e => s"$admittedDir/${e.name}")
-    if (committedFiles.isEmpty)
-      return Seq.empty[(Long, String, Long)].toDF("doc_id", "source", "n_tok")
-    spark.read.option("basePath", admittedDir).parquet(committedFiles: _*)
+    val marked = DeltaLog.batchKeys(DeltaLog.validate(s"$indexDir/totals",
+        spark.sparkContext.hadoopConfiguration)).map(_.stripPrefix("batch=")) ++
+      DeltaLog.foldedIds(spark, indexDir).map(_.toString)
+    DeltaLog.read(spark, s"$indexDir/admitted", "doc_id BIGINT, source STRING, n_tok BIGINT, batch STRING")
+      .where(col("batch").cast("string").isin(marked: _*))
       .select("doc_id", "source", "n_tok")
   }
 
@@ -3688,7 +3119,7 @@ object StreamingOps {
     * its batches visible, so the admitted set is byte-identical across a
     * compaction. Run while the admission stream is STOPPED.
     *
-    * Replay safety: [[compactDeltaLog]] (the one shared copy of the
+    * Replay safety: [[DeltaLog.fold]] (the one shared copy of the
     * crash protocol) — the `folded` sidecar lands before the destructive
     * totals swap, so a checkpoint-recovery redelivery of a
     * pre-compaction micro-batch skips instead of re-admitting documents
@@ -3699,11 +3130,11 @@ object StreamingOps {
     import spark.implicits._
     require(loadTokenBudgetMeta(spark, indexDir).isDefined,
       s"no tb_meta sidecar under $indexDir — not a token-budget admission dir")
-    compactDeltaLog(spark, indexDir, "totals", () => {
+    DeltaLog.fold(spark, indexDir, "totals")(() => {
       // per-source sums only — sources × 1 rows, never the corpus; every
       // committed batch wrote the "" sentinel row, so the fold always
       // carries it and the compacted batch directory is never empty
-      val foldedTotals = hhReadManifested(spark, s"$indexDir/totals")
+      val foldedTotals = DeltaLog.read(spark, s"$indexDir/totals", "source STRING, batch_toks BIGINT")
         .groupBy("source").agg(sum("batch_toks").as("batch_toks"))
         .select(col("source"), col("batch_toks"))
         .as[(String, Long)].collect().sortBy(_._1)
@@ -3719,14 +3150,10 @@ object StreamingOps {
     * sink's per-batch prior-totals read costs batches × sources rows, so
     * this IS the per-batch-read-cost gauge.
     */
-  def tokenBudgetTotalsBatches(spark: SparkSession, indexDir: String): Int = {
-    val entries = graft.io.Manifest.read(s"$indexDir/totals",
-      spark.sparkContext.hadoopConfiguration).getOrElse(
-      throw new IllegalStateException(
-        s"token-budget totals log at $indexDir/totals has no manifest — " +
-          "not a token-budget admission dir"))
-    entries.map(_.name.takeWhile(_ != '/')).distinct.size
-  }
+  def tokenBudgetTotalsBatches(spark: SparkSession, indexDir: String): Int =
+    DeltaLog.batchKeys(DeltaLog.manifest(s"$indexDir/totals", spark.sparkContext.hadoopConfiguration)(
+      s"token-budget totals log at $indexDir/totals has no manifest — " +
+        "not a token-budget admission dir")).size
 
   /** [[compactTokenBudget]] gated on [[tokenBudgetTotalsBatches]]: the
     * one-call maintenance form — fold the totals log only when more than
@@ -3740,10 +3167,11 @@ object StreamingOps {
   def compactTokenBudgetIfNeeded(
       spark: SparkSession,
       indexDir: String,
-      maxBatches: Int = 64): (Int, Boolean) =
-    gatedCompact(spark, indexDir, "totals", maxBatches,
-      () => tokenBudgetTotalsBatches(spark, indexDir),
-      () => compactTokenBudget(spark, indexDir))
+      maxBatches: Int = 64): (Int, Boolean) = {
+    require(maxBatches >= 1, s"maxBatches must be >= 1, got $maxBatches")
+    DeltaLog.gate(Seq(s"$indexDir/totals"), -1, spark.sparkContext.hadoopConfiguration)(
+      tokenBudgetTotalsBatches(spark, indexDir))(_ > maxBatches)(compactTokenBudget(spark, indexDir))
+  }
 
   // ------------------------------------ streaming contamination-rate audit
 
@@ -3806,18 +3234,8 @@ object StreamingOps {
         coalesce(expr("bit_xor(bench_id * 1000003 + h)"), lit(0L)).as("d")).head()
       (r.getLong(0), r.getLong(1))
     }
-    if (!graft.io.HadoopIO.exists(dcrMetaPath(indexDir), hconf)) {
-      benchSh.coalesce(1).write.mode("overwrite").parquet(benchDir)
-      benchmark.select(col(benchIdCol).cast("long").as("bench_id")).distinct()
-        .coalesce(1).write.mode("overwrite").parquet(docsDir)
-      graft.io.HadoopIO.mkdirs(matchedDir, hconf)
-      graft.io.Manifest.write(matchedDir, Seq.empty, hconf)
-      // meta LAST: the init commit marker — a crash anywhere above leaves
-      // no meta and the next construction re-runs the whole init
-      val (c, d) = digestOf(spark.read.parquet(benchDir))
-      Seq((n, c, d)).toDF("n", "bench_shingles", "bench_digest")
-        .coalesce(1).write.mode("overwrite").parquet(dcrMetaPath(indexDir))
-    } else {
+    val fresh = !graft.io.HadoopIO.exists(dcrMetaPath(indexDir), hconf)
+    if (!fresh) {
       val meta = spark.read.parquet(dcrMetaPath(indexDir))
         .select("n", "bench_shingles", "bench_digest").head()
       val (c, d) = digestOf(benchSh)
@@ -3826,29 +3244,23 @@ object StreamingOps {
           s"(benchmark, n=${meta.getInt(0)}); restarting with n=$n and a benchmark " +
           s"digesting ($c, $d) vs recorded (${meta.getLong(1)}, ${meta.getLong(2)}) " +
           "would silently change every rate — delete the directory or pass the same benchmark")
-      // fail-loud, not bootstrap: meta exists, so init committed a
-      // manifest — a missing one is lost state, and re-creating it from a
-      // raw listing would bless orphaned half-written batch files as
-      // committed (the validateDelta convention everywhere else)
-      require(graft.io.Manifest.read(matchedDir, hconf).isDefined,
-        s"contamination-rate matched log at $matchedDir has no manifest but $indexDir " +
-          "has committed meta — lost or foreign state; refusing to serve or extend it")
+    }
+    DeltaLog.init(indexDir, Seq(matchedDir), fresh, "contamination-rate", "a re-init", hconf) {
+      benchSh.coalesce(1).write.mode("overwrite").parquet(benchDir)
+      benchmark.select(col(benchIdCol).cast("long").as("bench_id")).distinct()
+        .coalesce(1).write.mode("overwrite").parquet(docsDir)
+      val (c, d) = digestOf(spark.read.parquet(benchDir))
+      Seq((n, c, d)).toDF("n", "bench_shingles", "bench_digest")
+        .coalesce(1).write.mode("overwrite").parquet(dcrMetaPath(indexDir))
     }
 
     (batch: DataFrame, batchId: Long) => {
       val sess = batch.sparkSession
       import sess.implicits._
-      val conf = sess.sparkContext.hadoopConfiguration
-      val committed = graft.io.Manifest.read(matchedDir, conf).getOrElse(Seq.empty)
-        .exists(_.name.startsWith(s"batch=$batchId/"))
-      if (!committed) {
-        graft.io.HadoopIO.delete(s"$matchedDir/batch=$batchId", conf)
+      DeltaLog.commit(sess, Seq(matchedDir), batchId) {
         val benchH = sess.read.parquet(benchDir).select("h").distinct()
-        val priorEntries = graft.io.Manifest.read(matchedDir, conf).get
-        val prior =
-          if (priorEntries.isEmpty) Seq.empty[Long].toDF("h")
-          else hhReadManifested(sess, matchedDir)
-            .filter(col("real")).select("h").distinct()
+        val prior = DeltaLog.read(sess, matchedDir, "h BIGINT, real BOOLEAN")
+          .filter(col("real")).select("h").distinct()
         // the corpus batch streams ONCE through the broadcast bench gate;
         // the matched set is bounded by the benchmark's shingle count
         val newMatches = shingles(batch, idCol, textCol, "__cd")
@@ -3861,8 +3273,6 @@ object StreamingOps {
         newMatches
           .unionByName(Seq((0L, false)).toDF("h", "real"))
           .coalesce(1).write.parquet(s"$matchedDir/batch=$batchId")
-        // manifest merge LAST = the commit marker
-        replaceBatchManifest(matchedDir, s"batch=$batchId", conf)
       }
     }
   }
@@ -3879,16 +3289,9 @@ object StreamingOps {
     val hconf = spark.sparkContext.hadoopConfiguration
     require(graft.io.HadoopIO.exists(dcrMetaPath(indexDir), hconf),
       s"no dcr_meta sidecar under $indexDir — not a contamination-rate audit dir")
-    val matchedDir = dcrMatchedDir(indexDir)
-    validateDelta(matchedDir, hconf)
+    val matched = DeltaLog.read(spark, dcrMatchedDir(indexDir), "h BIGINT, real BOOLEAN")
+      .filter(col("real")).select("h").distinct()
     val benchSh = spark.read.parquet(dcrBenchDir(indexDir))
-    val entries = graft.io.Manifest.read(matchedDir, hconf).get
-    val matched =
-      if (entries.isEmpty) {
-        import spark.implicits._
-        Seq.empty[Long].toDF("h")
-      } else hhReadManifested(spark, matchedDir)
-        .filter(col("real")).select("h").distinct()
     val perDoc = benchSh
       .join(broadcast(matched.withColumn("__m", lit(1L))), Seq("h"), "left")
       .groupBy("bench_id")
@@ -3924,7 +3327,7 @@ object StreamingOps {
     * append under `totals/batch=N`, manifest merge as the commit marker.
     * Totals are NOT idempotent under re-merge (unlike the weighted-sample
     * reservoir), so the marker IS load-bearing and compaction records
-    * folded batch ids via the shared [[compactDeltaLog]] crash protocol —
+    * folded batch ids via the shared [[DeltaLog.fold]] crash protocol —
     * a post-compaction redelivery finds its id in the sidecar and skips
     * instead of double-counting.
     */
@@ -3938,13 +3341,8 @@ object StreamingOps {
     import spark.implicits._
     val hconf = spark.sparkContext.hadoopConfiguration
     val totalsDir = cpTotalsDir(indexDir)
-    if (!graft.io.HadoopIO.exists(cpMetaPath(indexDir), hconf)) {
-      seedDeltaManifests(Seq(totalsDir), hconf)
-      // meta LAST: the init commit marker
-      Seq((sourceCol, langCol, textCol, charsCol))
-        .toDF("source_col", "lang_col", "text_col", "chars_col")
-        .coalesce(1).write.mode("overwrite").parquet(cpMetaPath(indexDir))
-    } else {
+    val fresh = !graft.io.HadoopIO.exists(cpMetaPath(indexDir), hconf)
+    if (!fresh) {
       val r = spark.read.parquet(cpMetaPath(indexDir))
         .select("source_col", "lang_col", "text_col", "chars_col").head()
       require(r.getString(0) == sourceCol && r.getString(1) == langCol &&
@@ -3953,18 +3351,15 @@ object StreamingOps {
           s"(${r.getString(0)}, ${r.getString(1)}, ${r.getString(2)}, ${r.getString(3)}); " +
           s"restarting with ($sourceCol, $langCol, $textCol, $charsCol) would mix " +
           "incomparable totals — delete the directory or pass matching columns")
-      requireCommittedManifests("corpus-profile", indexDir,
-        Seq(totalsDir), "compactCorpusProfile", hconf)
+    }
+    DeltaLog.init(indexDir, Seq(totalsDir), fresh, "corpus-profile", "compactCorpusProfile", hconf) {
+      Seq((sourceCol, langCol, textCol, charsCol))
+        .toDF("source_col", "lang_col", "text_col", "chars_col")
+        .coalesce(1).write.mode("overwrite").parquet(cpMetaPath(indexDir))
     }
 
     (batch: DataFrame, batchId: Long) => {
-      val sess = batch.sparkSession
-      val conf = sess.sparkContext.hadoopConfiguration
-      val committed = graft.io.Manifest.read(totalsDir, conf).getOrElse(Seq.empty)
-        .exists(_.name.startsWith(s"batch=$batchId/")) ||
-        foldedBatchIds(sess, indexDir).contains(batchId)
-      if (!committed) {
-        graft.io.HadoopIO.delete(s"$totalsDir/batch=$batchId", conf)
+      DeltaLog.commit(batch.sparkSession, Seq(totalsDir), batchId, folded = Some(indexDir)) {
         batch
           .groupBy(col(sourceCol).cast("string").as("source"),
             col(langCol).cast("string").as("lang"))
@@ -3972,8 +3367,6 @@ object StreamingOps {
             sum(col(charsCol).cast("long")).as("total_chars"),
             sum(size(split(trim(col(textCol)), "\\s+")).cast("long")).as("total_tokens"))
           .coalesce(1).write.parquet(s"$totalsDir/batch=$batchId")
-        // manifest merge LAST = the commit marker
-        replaceBatchManifest(totalsDir, s"batch=$batchId", conf)
       }
     }
   }
@@ -3988,15 +3381,7 @@ object StreamingOps {
     val hconf = spark.sparkContext.hadoopConfiguration
     require(graft.io.HadoopIO.exists(cpMetaPath(indexDir), hconf),
       s"no cp_meta sidecar under $indexDir — not a corpus-profile dir")
-    val totalsDir = cpTotalsDir(indexDir)
-    validateDelta(totalsDir, hconf)
-    val entries = graft.io.Manifest.read(totalsDir, hconf).get
-    if (entries.isEmpty) {
-      import spark.implicits._
-      return Seq.empty[(String, Long, Long, Long, Long, Double)]
-        .toDF("source", "n_docs", "n_langs", "total_chars", "total_tokens", "avg_chars")
-    }
-    hhReadManifested(spark, totalsDir)
+    DeltaLog.read(spark, cpTotalsDir(indexDir), "source STRING, lang STRING, n_docs BIGINT, total_chars BIGINT, total_tokens BIGINT")
       .groupBy("source")
       .agg(sum("n_docs").as("n_docs"),
         countDistinct("lang").as("n_langs"),
@@ -4007,7 +3392,7 @@ object StreamingOps {
   }
 
   /** Fold the totals log into ONE `batch=compacted` segment through the
-    * shared [[compactDeltaLog]] crash protocol (folded-ids sidecar lands
+    * shared [[DeltaLog.fold]] crash protocol (folded-ids sidecar lands
     * before the destructive swap, so post-compaction redeliveries skip
     * instead of double-counting). Run while the stream is stopped.
     */
@@ -4015,8 +3400,8 @@ object StreamingOps {
     val hconf = spark.sparkContext.hadoopConfiguration
     require(graft.io.HadoopIO.exists(cpMetaPath(indexDir), hconf),
       s"no cp_meta sidecar under $indexDir — not a corpus-profile dir")
-    compactDeltaLog(spark, indexDir, "totals", () => {
-      val folded = hhReadManifested(spark, cpTotalsDir(indexDir))
+    DeltaLog.fold(spark, indexDir, "totals")(() => {
+      val folded = DeltaLog.read(spark, cpTotalsDir(indexDir), "source STRING, lang STRING, n_docs BIGINT, total_chars BIGINT, total_tokens BIGINT")
         .groupBy("source", "lang")
         .agg(sum("n_docs").as("n_docs"),
           sum("total_chars").as("total_chars"),
@@ -4073,36 +3458,26 @@ object StreamingOps {
     import spark.implicits._
     val hconf = spark.sparkContext.hadoopConfiguration
     val digDir = deDigDir(indexDir)
-    if (!graft.io.HadoopIO.exists(deMetaPath(indexDir), hconf)) {
-      seedDeltaManifests(Seq(digDir), hconf)
-      // meta LAST: the init commit marker
-      Seq((idCol, textCol)).toDF("id_col", "text_col")
-        .coalesce(1).write.mode("overwrite").parquet(deMetaPath(indexDir))
-    } else {
+    val fresh = !graft.io.HadoopIO.exists(deMetaPath(indexDir), hconf)
+    if (!fresh) {
       val r = spark.read.parquet(deMetaPath(indexDir)).select("id_col", "text_col").head()
       require(r.getString(0) == idCol && r.getString(1) == textCol,
         s"exact-dedup state at $indexDir was maintained over (${r.getString(0)}, " +
           s"${r.getString(1)}); restarting with ($idCol, $textCol) would mix " +
           "incomparable digests — delete the directory or pass matching columns")
-      requireCommittedManifests("exact-dedup", indexDir, Seq(digDir),
-        "compactDedupExact", hconf)
+    }
+    DeltaLog.init(indexDir, Seq(digDir), fresh, "exact-dedup", "compactDedupExact", hconf) {
+      Seq((idCol, textCol)).toDF("id_col", "text_col")
+        .coalesce(1).write.mode("overwrite").parquet(deMetaPath(indexDir))
     }
 
     (batch: DataFrame, batchId: Long) => {
-      val sess = batch.sparkSession
-      val conf = sess.sparkContext.hadoopConfiguration
-      val committed = graft.io.Manifest.read(digDir, conf).getOrElse(Seq.empty)
-        .exists(_.name.startsWith(s"batch=$batchId/")) ||
-        foldedBatchIds(sess, indexDir).contains(batchId)
-      if (!committed) {
-        graft.io.HadoopIO.delete(s"$digDir/batch=$batchId", conf)
+      DeltaLog.commit(batch.sparkSession, Seq(digDir), batchId, folded = Some(indexDir)) {
         batch
           .groupBy(md5(col(textCol)).as("digest"))
           .agg(min(col(idCol).cast("long")).as("keep_id"),
             count(lit(1)).as("n_dups"))
           .write.parquet(s"$digDir/batch=$batchId")
-        // manifest merge LAST = the commit marker
-        replaceBatchManifest(digDir, s"batch=$batchId", conf)
       }
     }
   }
@@ -4118,20 +3493,13 @@ object StreamingOps {
     val hconf = spark.sparkContext.hadoopConfiguration
     require(graft.io.HadoopIO.exists(deMetaPath(indexDir), hconf),
       s"no de_meta sidecar under $indexDir — not an exact-dedup dir")
-    val digDir = deDigDir(indexDir)
-    validateDelta(digDir, hconf)
-    val entries = graft.io.Manifest.read(digDir, hconf).get
-    if (entries.isEmpty) {
-      import spark.implicits._
-      return Seq.empty[(String, Long, Long)].toDF("digest", "keep_id", "n_dups")
-    }
-    hhReadManifested(spark, digDir)
+    DeltaLog.read(spark, deDigDir(indexDir), "digest STRING, keep_id BIGINT, n_dups BIGINT")
       .groupBy("digest")
       .agg(min("keep_id").as("keep_id"), sum("n_dups").as("n_dups"))
   }
 
   /** Fold the digest log back to one segment per digest set. Goes through
-    * the shared [[compactDeltaLog]] crash protocol (folded-ids sidecar
+    * the shared [[DeltaLog.fold]] crash protocol (folded-ids sidecar
     * lands before the destructive swap, so a batch redelivered after its
     * segment was folded away skips instead of double-counting its
     * `n_dups`). Run while the stream is stopped. The fold stays
@@ -4142,8 +3510,8 @@ object StreamingOps {
     val hconf = spark.sparkContext.hadoopConfiguration
     require(graft.io.HadoopIO.exists(deMetaPath(indexDir), hconf),
       s"no de_meta sidecar under $indexDir — not an exact-dedup dir")
-    compactDeltaLog(spark, indexDir, "dig", () => {
-      val folded = hhReadManifested(spark, deDigDir(indexDir))
+    DeltaLog.fold(spark, indexDir, "dig")(() => {
+      val folded = DeltaLog.read(spark, deDigDir(indexDir), "digest STRING, keep_id BIGINT, n_dups BIGINT")
         .groupBy("digest")
         .agg(min("keep_id").as("keep_id"), sum("n_dups").as("n_dups"))
       (tmpDir: String) =>
@@ -4203,31 +3571,23 @@ object StreamingOps {
       seed: String = "s"): (DataFrame, Long) => Unit = {
     import spark.implicits._
     require(k > 0, s"k must be positive, got $k")
-    val hconf = spark.sparkContext.hadoopConfiguration
     val candDir = wsCandDir(indexDir)
-    loadWeightedSampleMeta(spark, indexDir) match {
-      case Some((ek, es, eid, ew)) =>
-        require(ek == k && es == seed && eid == idCol && ew == weightCol,
-          s"weighted-sample state at $indexDir was maintained with (k=$ek, seed=$es, " +
-            s"id=$eid, weight=$ew); restarting with (k=$k, seed=$seed, id=$idCol, " +
-            s"weight=$weightCol) would change the sample retroactively — delete the " +
-            "directory or pass matching parameters")
-        requireCommittedManifests("weighted-sample", indexDir,
-          Seq(candDir), "compactWeightedSample", hconf)
-      case None =>
-        seedDeltaManifests(Seq(candDir), hconf)
-        // meta LAST: the init commit marker
-        Seq((k, seed, idCol, weightCol)).toDF("k", "seed", "id_col", "weight_col")
-          .coalesce(1).write.mode("overwrite").parquet(wsMetaPath(indexDir))
+    val existing = loadWeightedSampleMeta(spark, indexDir)
+    existing.foreach { case (ek, es, eid, ew) =>
+      require(ek == k && es == seed && eid == idCol && ew == weightCol,
+        s"weighted-sample state at $indexDir was maintained with (k=$ek, seed=$es, " +
+          s"id=$eid, weight=$ew); restarting with (k=$k, seed=$seed, id=$idCol, " +
+          s"weight=$weightCol) would change the sample retroactively — delete the " +
+          "directory or pass matching parameters")
+    }
+    DeltaLog.init(indexDir, Seq(candDir), existing.isEmpty, "weighted-sample",
+        "compactWeightedSample", spark.sparkContext.hadoopConfiguration) {
+      Seq((k, seed, idCol, weightCol)).toDF("k", "seed", "id_col", "weight_col")
+        .coalesce(1).write.mode("overwrite").parquet(wsMetaPath(indexDir))
     }
 
     (batch: DataFrame, batchId: Long) => {
-      val sess = batch.sparkSession
-      val conf = sess.sparkContext.hadoopConfiguration
-      val committed = graft.io.Manifest.read(candDir, conf).getOrElse(Seq.empty)
-        .exists(_.name.startsWith(s"batch=$batchId/"))
-      if (!committed) {
-        graft.io.HadoopIO.delete(s"$candDir/batch=$batchId", conf)
+      DeltaLog.commit(batch.sparkSession, Seq(candDir), batchId) {
         // batch-local top-k: only rows that could ever enter the global
         // reservoir; TakeOrderedAndProject, never a global sort
         batch
@@ -4236,8 +3596,6 @@ object StreamingOps {
           .orderBy(col("__skey").desc, col(idCol))
           .limit(k)
           .coalesce(1).write.parquet(s"$candDir/batch=$batchId")
-        // manifest merge LAST = the commit marker
-        replaceBatchManifest(candDir, s"batch=$batchId", conf)
       }
     }
   }
@@ -4253,27 +3611,13 @@ object StreamingOps {
     * not serve a different schema than the first committed batch.
     */
   def weightedSampleMaintained(spark: SparkSession, indexDir: String): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
     val (k, _, idCol, weightCol) = loadWeightedSampleMeta(spark, indexDir).getOrElse(
       throw new IllegalStateException(
         s"no ws_meta sidecar under $indexDir — not a weighted-sample dir"))
-    val candDir = wsCandDir(indexDir)
-    validateDelta(candDir, hconf)
-    val entries = graft.io.Manifest.read(candDir, hconf).get
-    if (entries.isEmpty)
-      return spark.emptyDataFrame
-        .withColumn(idCol, lit(null).cast("long"))
-        .withColumn(weightCol, lit(null).cast("double"))
-        .withColumn("sample_rank", lit(null).cast("int"))
-        .limit(0)
-    val cands = hhReadManifested(spark, candDir)
-      .select(col(idCol).cast("long").as(idCol),
-        col(weightCol).cast("double").as(weightCol), col("__skey"))
-    val conflicting = cands.groupBy(idCol)
-      .agg(countDistinct(weightCol).as("__nw")).filter(col("__nw") > 1).limit(1).count()
-    require(conflicting == 0,
-      s"weighted-sample log at $candDir carries an id with two different weights — " +
-        "ids must be unique across the stream with a stable weight; the sample would " +
+    val cands = requireStableWeights(wsCandidates(spark, indexDir, idCol, weightCol)
+      .select(col(idCol).cast("long").as(idCol), col(weightCol).cast("double").as(weightCol),
+        col("__skey")), indexDir, idCol, weightCol,
+      "ids must be unique across the stream with a stable weight; the sample would " +
         "be nondeterministic")
     cands.dropDuplicates(idCol)
       .orderBy(col("__skey").desc, col(idCol))
@@ -4308,9 +3652,7 @@ object StreamingOps {
       throw new IllegalStateException(
         s"no ws_meta sidecar under $indexDir — not a weighted-sample dir"))
     val candDir = wsCandDir(indexDir)
-    validateDelta(candDir, hconf)
-    val entries = graft.io.Manifest.read(candDir, hconf).get
-    val segs = entries.map(_.name.takeWhile(_ != '/')).distinct
+    val segs = DeltaLog.batchKeys(DeltaLog.validate(candDir, hconf))
     if (segs.length <= maxBatches) return (segs.length, false)
     // compact segments share the batch= prefix (one partition column for
     // the discovery under basePath); the c-prefix keeps them disjoint
@@ -4323,24 +3665,16 @@ object StreamingOps {
     // nextCompact — did not advance); clear it or the re-run's write
     // throws path-already-exists and compaction wedges permanently
     graft.io.HadoopIO.delete(s"$candDir/$seg", hconf)
-    val cands = hhReadManifested(spark, candDir)
-      .select(col(idCol), col(weightCol), col("__skey"))
     // same stable-weight contract as the maintained read — folding away a
     // conflicting id here would destroy the evidence the read checks for
-    val conflicting = cands.groupBy(idCol)
-      .agg(countDistinct(weightCol).as("__nw")).filter(col("__nw") > 1).limit(1).count()
-    require(conflicting == 0,
-      s"weighted-sample log at $candDir carries an id with two different weights — " +
+    requireStableWeights(wsCandidates(spark, indexDir, idCol, weightCol), indexDir, idCol, weightCol,
         "refusing to compact a nondeterministic sample away")
-    cands
       .dropDuplicates(idCol)
       .orderBy(col("__skey").desc, col(idCol))
       .limit(k)
       .coalesce(1).write.parquet(s"$candDir/$seg")
-    val folded = listDelta(candDir, hconf, Some(seg))
-      .map { case (rel, len) => graft.io.ManifestEntry(rel, len, -1L) }
     // the manifest rewrite IS the swap
-    graft.io.Manifest.write(candDir, folded, hconf)
+    DeltaLog.relist(candDir, seg, hconf, alone = true)
     // sweep from the FILESYSTEM, not the manifest: a crash in an earlier
     // compaction's post-swap window leaves superseded segment dirs the
     // manifest no longer references, and a manifest-derived `segs` would
@@ -4350,5 +3684,24 @@ object StreamingOps {
       .filterNot(_ == seg)
       .foreach(s => graft.io.HadoopIO.delete(s"$candDir/$s", hconf))
     (segs.length, true)
+  }
+
+  /** The committed (id, weight, key) candidate rows of a weighted-sample log. */
+  private def wsCandidates(spark: SparkSession, indexDir: String, idCol: String,
+      weightCol: String): DataFrame =
+    DeltaLog.read(spark, wsCandDir(indexDir), s"`$idCol` BIGINT, `$weightCol` DOUBLE, __skey DOUBLE")
+      .select(col(idCol), col(weightCol), col("__skey"))
+
+  /** Fail loudly when one id carries two different weights (the sample would
+    * be nondeterministic); returns `cands` unchanged otherwise.
+    */
+  private def requireStableWeights(cands: DataFrame, indexDir: String, idCol: String,
+      weightCol: String, refusal: String): DataFrame = {
+    val conflicting = cands.groupBy(idCol)
+      .agg(countDistinct(weightCol).as("__nw")).filter(col("__nw") > 1).limit(1).count()
+    require(conflicting == 0,
+      s"weighted-sample log at ${wsCandDir(indexDir)} carries an id with two different weights — " +
+        refusal)
+    cands
   }
 }

@@ -3,6 +3,7 @@ package graft
 import graft.multimodal.Multimodal
 import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.{VectorOp, VectorState}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -356,6 +357,100 @@ class StreamingSpec extends SparkTestBase {
         Seq((5000L, img(77))).toDF("id", "payload")), 2L)
     }
     assert(e.getMessage.contains("INCOMPLETE"), s"got: ${e.getMessage}")
+  }
+
+  /** Stage the crash of a banded sink's batch 1 after its state write but
+    * before its bands write: the batch's bands and pairs are gone and
+    * neither the state nor the bands manifest lists it, while its state
+    * files stay on disk.
+    */
+  private def tearBatchOne(dir: String, stateLog: String): Unit = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    Seq("bands", "pairs").foreach(t => graft.io.HadoopIO.delete(s"$dir/$t/batch=1", hconf))
+    Seq(stateLog, "bands").foreach { t =>
+      graft.io.Manifest.write(s"$dir/$t", graft.io.Manifest.read(s"$dir/$t", hconf).get
+        .filterNot(_.name.startsWith("batch=1/")), hconf)
+    }
+    assert(new java.io.File(s"$dir/$stateLog/batch=1").listFiles().exists(_.getName.endsWith(".parquet")))
+  }
+
+  /** Near-dup batches 0-2, batch 1 torn by `tear` (given the dir, the
+    * sink and the batch) and then redelivered: the converged pairs must
+    * equal the batch operator's, so the near-copies of batch 1 in batch 2
+    * still pair.
+    */
+  private def nearDupTornBatchOne(name: String)(
+      tear: (String, (DataFrame, Long) => Unit, DataFrame) => Unit): Unit = {
+    def text(i: Long): String = (0 until 40).map(t => s"w${i}x$t").mkString(" ")
+    def copyText(i: Long): String =
+      ((0 until 38).map(t => s"w${i}x$t") ++ Seq("changedA", "changedB")).mkString(" ")
+    val b0 = (0L until 20L).map(i => (i, text(i)))
+    val b1 = (100L until 110L).map(i => (i, text(i)))
+    val b2 = (100L until 104L).map(i => (i + 1000L, copyText(i)))
+    val dir = java.nio.file.Files.createTempDirectory(name).toString
+    val sink = StreamingOps.nearDupSink(spark, dir, threshold = 0.8)
+    sink(b0.toDF("doc_id", "text"), 0L)
+    tear(dir, sink, b1.toDF("doc_id", "text"))
+    sink(b1.toDF("doc_id", "text"), 1L) // the redelivery
+    sink(b2.toDF("doc_id", "text"), 2L)
+    val got = StreamingOps.nearDupSinkPairs(spark, dir)
+      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 9))
+      .as[(Long, Long, Double)].collect().toSet
+    val batch = graft.dedup.Dedup
+      .minhashLshPairs((b0 ++ b1 ++ b2).toDF("doc_id", "text"), threshold = 0.8)
+      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 9))
+      .as[(Long, Long, Double)].collect().toSet
+    assert(batch.map(p => (p._1, p._2)) === (100L until 104L).map(i => (i, i + 1000L)).toSet)
+    assert(got === batch)
+  }
+
+  test("near-dup sink: a batch torn between its docs and bands writes is rewritten whole on " +
+    "redelivery, so later near-copies of its docs still pair") {
+    nearDupTornBatchOne("neardup_torn") { (dir, sink, b1) =>
+      sink(b1, 1L)
+      tearBatchOne(dir, "docs")
+    }
+  }
+
+  test("near-dup sink: a crash before the docs manifest lands (bands already listed) is " +
+    "rewritten on redelivery") {
+    nearDupTornBatchOne("neardup_marker") { (dir, sink, b1) =>
+      // the docs (marker) manifest rewrite of batch 1 dies: its in-progress
+      // path is blocked, so the bands manifest lists batch 1 and docs does not
+      val hconf = spark.sparkContext.hadoopConfiguration
+      val blocker = s"$dir/docs/${graft.io.Manifest.FileName}.inprogress"
+      graft.io.HadoopIO.mkdirs(blocker, hconf)
+      intercept[java.io.IOException](sink(b1, 1L))
+      assert(graft.io.Manifest.read(s"$dir/bands", hconf).get.exists(_.name.startsWith("batch=1/")))
+      graft.io.HadoopIO.delete(blocker, hconf)
+    }
+  }
+
+  test("media phash sink: a batch torn between its hashes and bands writes is rewritten whole " +
+    "on redelivery, so later near-copies of its items still pair") {
+    def rgb(seed: Int) = {
+      val rnd = new scala.util.Random(seed)
+      Array.fill(16 * 12 * 3)((48 + rnd.nextInt(128)).toByte)
+    }
+    def img(seed: Int, lift: Int = 0): Array[Byte] =
+      Multimodal.encodePng(rgb(seed).map(b => ((b & 0xff) + lift).toByte), 16, 12)
+    val b0 = (0 until 12).map(i => (i.toLong, img(i)))
+    val b1 = (100 until 106).map(i => (i.toLong, img(i)))
+    val b2 = (100 until 104).map(i => (i + 1000L, img(i, lift = 20)))
+    def hashes(rows: Seq[(Long, Array[Byte])]) =
+      graft.dedup.ImageDedup.dHashes(spark, rows.toDF("id", "payload"))
+    val dir = java.nio.file.Files.createTempDirectory("media_phash_torn").toString
+    val sink = StreamingOps.mediaPhashSink(spark, dir, maxDist = 3, bands = 4)
+    sink(hashes(b0), 0L)
+    sink(hashes(b1), 1L)
+    tearBatchOne(dir, "hashes")
+    sink(hashes(b1), 1L) // the redelivery
+    sink(hashes(b2), 2L)
+    val got = StreamingOps.mediaPhashSinkPairs(spark, dir).as[(Long, Long, Long)].collect().toSet
+    val batch = graft.dedup.HammingLsh.bandedPairs(hashes(b0 ++ b1 ++ b2), maxDist = 3, bands = 4)
+      .as[(Long, Long, Long)].collect().toSet
+    assert((100L until 104L).forall(i => batch.exists(p => p._1 == i && p._2 == i + 1000L)))
+    assert(got === batch)
   }
 
 }
@@ -994,6 +1089,24 @@ class StreamingIndexSpec extends SparkTestBase {
     val foreign = java.nio.file.Files.createTempDirectory("hnsw_foreign").toString
     intercept[Exception](
       StreamingOps.searchHnswMaintained(spark, foreign, Array((0L, Array(1f, 0f))), k = 3))
+  }
+
+  test("a fresh IVF / IVF-PQ maintenance directory serves its gate and views before batch 0") {
+    val centroids = Array(Array(1f, 0f), Array(0f, 1f))
+    val dir = java.nio.file.Files.createTempDirectory("ivf_fresh").toString
+    StreamingOps.ivfMaintenanceSink(spark, dir, centroids)
+    assert(StreamingOps.compactIvfIfNeeded(spark, dir) === ((0.0, false)))
+    assert(StreamingOps.ivfMaintainedState(spark, dir).collect().isEmpty)
+    val (_, _, pqCentroids, cb) = pqFixture()
+    val pqDir = java.nio.file.Files.createTempDirectory("ivfpq_fresh").toString
+    StreamingOps.ivfPqMaintenanceSink(spark, pqDir, pqCentroids, cb)
+    assert(StreamingOps.compactIvfIfNeeded(spark, pqDir) === ((0.0, false)))
+    assert(StreamingOps.ivfPqMaintainedState(spark, pqDir).collect().isEmpty)
+    // a directory stopped before its first batch by a version that seeded
+    // the delta log lazily (meta, no delta log at all) is seeded, not refused
+    graft.io.HadoopIO.delete(s"$dir/delta", spark.sparkContext.hadoopConfiguration)
+    StreamingOps.ivfMaintenanceSink(spark, dir, centroids)
+    assert(StreamingOps.compactIvfIfNeeded(spark, dir) === ((0.0, false)))
   }
 
   test("compactIfNeeded gates on manifest byte ratios for both index types") {
